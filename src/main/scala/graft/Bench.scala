@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.{Artifacts, Registry, ServingIndexes}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -109,21 +110,22 @@ object Bench {
     // warm-up: JVM, codegen, parquet footer reads
     graft.sources.Tables.names.foreach(n =>
       graft.sources.Tables(spark, sfDir, n).count())
-    // build the persisted serving indexes OUTSIDE any timed window:
-    // q172–q175 measure the per-query/per-ingest serving cost of an
-    // index a deployment writes once — the same attribution rule as
-    // the shared-artifact payer ordering below, applied to storage.
-    // Only when an indexed query is actually selected: a filtered run
-    // (`Bench q42`) must not pay four corpus-scanning builds it never
-    // reads (the accessors build lazily anyway; this is purely the
-    // timing-attribution hoist).
-    val selectedNames =
-      if (args.isEmpty) SparkEntry.queries.keySet
-      else SparkEntry.queries.keySet.filter(args.contains)
-    if (Seq("q172", "q173", "q174", "q175", "q201", "q202", "q204",
-        "q205", "q206", "q207", "q208", "q209", "q210")
-        .exists(p => selectedNames.exists(_.startsWith(p))))
-      graft.queries.ServingIndexes.ensureAll(spark, sfDir)
+    // the selected queries in run order ([[Registry.order]]): a shared
+    // artifact's payer runs before its riders, so the per-query numbers
+    // attribute the build to the payer. Checked from the declarations:
+    // a rename that reorders a payer behind a rider fails loudly
+    // instead of silently re-attributing the cost.
+    val selected = Registry.all
+      .filter(q => args.isEmpty || args.contains(q.name))
+      .sortBy(q => Registry.order(q.name))
+    val misordered = Registry.payerOrderViolations(selected)
+    require(misordered.isEmpty,
+      "bench attribution: " + misordered.mkString("; "))
+    // build the serving indexes the selected queries read OUTSIDE any
+    // timed window: an indexed query measures the serving cost of an
+    // index a deployment writes once.
+    selected.flatMap(_.rides).collect { case i: ServingIndexes.Index => i }
+      .distinct.foreach(_(spark, sfDir))
 
     // Fixed-work CPU canary (VERDICT r14 #5): the same deterministic
     // compute-bound job timed at suite start and end, so a BENCH_r{N}
@@ -145,56 +147,11 @@ object Bench {
     canary()
     val canaryStart = canary()
 
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter { case (k, _) => args.contains(k) }.toSeq
-    // Registry order note: queries run NUMBER-sorted (q9 < q45 < q102 —
-    // a plain string sort would run q102 before its q42/q45 payers once
-    // three-digit names exist), so q42 (the first consumer of the
-    // shared verified-pair table) pays its mining cost and q45/q54 ride
-    // the materialization — the per-query numbers reflect that
-    // documented attribution (ADVICE r2). Enforced, not just documented
-    // (ADVICE r3): if a rename ever reorders a shared-artifact payer
-    // behind one of its riders, fail loudly instead of silently
-    // re-attributing the mining cost.
-    def qKey(name: String): (Int, String) = {
-      val digits = name.drop(1).takeWhile(_.isDigit)
-      (if (digits.isEmpty) Int.MaxValue else digits.toInt, name)
-    }
-    val ordered = selected.map(_._1).sortBy(qKey)
-    def pos(prefix: String) = ordered.indexWhere(_.startsWith(prefix))
-    for ((payer, rider) <- Seq("q42" -> "q45", "q42" -> "q54",
-           "q42" -> "q150", "q45" -> "q149", "q42" -> "q153",
-           "q45" -> "q153", "q42" -> "q155", "q45" -> "q155",
-           "q42" -> "q97", "q42" -> "q98", "q42" -> "q105",
-           "q45" -> "q59", "q45" -> "q64", "q45" -> "q78",
-           "q45" -> "q88", "q45" -> "q90", "q45" -> "q92",
-           "q45" -> "q93", "q45" -> "q102", "q45" -> "q103",
-           "q45" -> "q104", "q45" -> "q143",
-           "q66" -> "q67", "q66" -> "q68", "q66" -> "q76",
-           "q66" -> "q83",
-           "q69" -> "q70", "q69" -> "q72", "q69" -> "q177",
-           "q70" -> "q115", "q70" -> "q126", "q70" -> "q156",
-           "q70" -> "q170",
-           "q101" -> "q106", "q101" -> "q135",
-           "q111" -> "q124", "q111" -> "q125", "q111" -> "q134",
-           "q111" -> "q136", "q111" -> "q141", "q111" -> "q178",
-           "q122" -> "q123", "q134" -> "q137", "q157" -> "q159",
-           "q170" -> "q171", "q93" -> "q155", "q148" -> "q155",
-           "q151" -> "q155", "q151" -> "q165",
-           "q156" -> "q158", "q156" -> "q194",
-           "q74" -> "q75", "q74" -> "q77", "q74" -> "q139",
-           "q111" -> "q197", "q157" -> "q197",
-           "q198" -> "q199", "q198" -> "q200", "q198" -> "q203",
-           "q205" -> "q206", "q207" -> "q208", "q208" -> "q210",
-           "q209" -> "q210")
-         if pos(payer) >= 0 && pos(rider) >= 0)
-      require(pos(payer) < pos(rider),
-        s"bench attribution: shared-artifact payer $payer must run before rider $rider")
     val diag = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val (suiteCpu0, suiteRun0, _, _) = drained()
     val suiteTasks0 = metrics.nTasks.get
-    val results = selected.sortBy(kv => qKey(kv._1)).map { case (name, fn) =>
+    val results = selected.map { q =>
+      val name = q.name
       val (cpu0, run0, gc0, sp0) = drained()
       // job group = query name: stamps every job/stage this query runs
       // into the event log, so EventLogDigest can attribute stages to
@@ -203,19 +160,14 @@ object Bench {
       spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
       val t0 = System.nanoTime()
       val r = try {
-        val df = fn(spark, sfDir)
+        val df = q.run(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
         val t = name -> (System.nanoTime() - t0) / 1e9
-        // release each query's persisted result once consumed (q45's
-        // cluster labels etc.) so cached blocks don't accumulate across
-        // 61 queries in one JVM — but never the memoized pair table,
-        // whose whole point is cross-query reuse
+        // release each query's persisted result once consumed so cached
+        // blocks don't accumulate across the suite in one JVM — but
+        // never a shared artifact, whose whole point is cross-query reuse
         if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-            && !graft.queries.DedupOps.isSharedArtifact(df)
-            && !graft.queries.VectorOps.isSharedArtifact(df)
-            && !graft.queries.TextOps.isSharedArtifact(df)
-            && !graft.queries.PipelineOps.isSharedArtifact(df)
-            && !graft.queries.KnnGraphOps.isSharedArtifact(df))
+            && !Artifacts.holds(df))
           df.unpersist(blocking = false)
         t
       } catch { case e: Throwable =>

@@ -69,15 +69,6 @@ object Operators {
       .drop("_rn")
   }
 
-  /** Per-partition top-k by an ordering — rank ≤ k with deterministic
-    * tie-break columns included in `order`. */
-  def topKPerGroup(df: DataFrame, partition: Seq[String],
-      order: Seq[Column], k: Int, rankCol: String = "rank"): DataFrame = {
-    val w = Window.partitionBy(partition.map(col): _*).orderBy(order: _*)
-    df.withColumn(rankCol, row_number().over(w).cast("long"))
-      .filter(col(rankCol) <= k)
-  }
-
   /** Skew-mitigating inner equi-join: salt the skewed big side into
     * `saltFactor` sub-keys and replicate the small side across salts.
     * Result is identical to `big.join(small, keys)`; the shuffle of a

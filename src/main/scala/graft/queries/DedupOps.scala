@@ -235,16 +235,13 @@ object DedupOps {
     * SortedIntersectSize merge-scan — correct, but 8.7 s at sf0.1
     * with array-laden exchanges; this form moves two longs per
     * candidate row and the same integers fall out. */
-  /** The (doc, shingle, df) table EVERY q195 consumer derives from —
-    * memoized per (session, dataset) for the registry path so its
-    * cache follows the shared-artifact lifecycle (Bench release
-    * policy, invalidate hook) instead of leaking a corpus-scale
-    * persist for the JVM lifetime (review finding, this round). The
-    * spec path ([[containmentPairsOf]] on synthetic frames) builds it
-    * uncached — recompute is free at spec size. */
-  private val containExMemo = new ArtifactMemo
+  /** The (doc, shingle, df) table q195 derives from, as an artifact so
+    * its corpus-scale persist is released with the others instead of
+    * living for the JVM. The spec path ([[containmentPairsOf]] on
+    * synthetic frames) builds it uncached. */
+  private[graft] val containEx = Artifacts[DataFrame]("dedup.containment")
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    containmentFrom(containExMemo.get(spark, dir)(
+    containmentFrom(containEx.get(spark, dir)(
       // fanned read (guide §2.5): the shingle explode + df join above
       // the scan is the corpus-pass this artifact exists to amortize —
       // a single-split file would run it serially
@@ -438,74 +435,18 @@ object DedupOps {
       |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
       |    / len(list_distinct(list_concat(a.s, b.s))) >= 0.5""".stripMargin
 
-  /** The verified near-dup pair table, materialized once per
-    * (session, dataset): [[minhashLsh]] is the INPUT to cluster
-    * assignment (q45) and contamination reporting (q54) as well as a
-    * result in its own right (q42) — exactly the artifact a deployment
-    * writes to storage once and joins repeatedly. Caching here is that
-    * materialization, in-session: the first consumer pays the mining
-    * cost, later consumers read the persisted pairs. Entries for
-    * stopped contexts are evicted on access (their cached blocks died
-    * with the executor anyway), so the memo cannot pin dead sessions
-    * or their block-manager state in a long-lived JVM. */
-  /** Keyed once-per-(context, dataset) artifact memo. Keyed on the
-    * CONTEXT, not the session: cached blocks live in the context's
-    * block manager, so `newSession()` clones share the one
-    * materialization instead of silently double-mining. Entries for
-    * stopped contexts are evicted on access. The build runs OUTSIDE the
-    * map's bin lock (a per-key cell synchronizes instead) because
-    * cluster building executes whole Spark jobs — seconds of work a
-    * ConcurrentHashMap compute lambda must not hold a bin lock for. */
-  private[graft] final class ArtifactMemo {
-    private final class Cell(build0: () => DataFrame) {
-      // the thunk is nulled once the value exists so the cell doesn't
-      // pin the first caller's session/closure for the memo's lifetime
-      private var b: () => DataFrame = build0
-      @volatile private var v: DataFrame = _
-      def value: DataFrame = {
-        if (v == null) synchronized { if (v == null) { v = b(); b = null } }
-        v
-      }
-      def peek: Option[DataFrame] = Option(v)
-      /** Unpersist-if-built. Synchronizing on the cell serializes with
-        * an in-flight build (which holds the same lock), so a racing
-        * invalidate waits for the build and then releases its blocks
-        * instead of orphaning them; the builder still gets a valid
-        * (merely uncached) frame back. */
-      def release(): Unit = synchronized {
-        peek.foreach(df =>
-          try df.unpersist() catch { case _: Exception => () })
-      }
-    }
-    private val m = new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, String), Cell]
-    def get(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-      m.keySet.removeIf(k => k._1.isStopped)
-      m.computeIfAbsent((spark.sparkContext, dir),
-        _ => new Cell(() => build)).value
-    }
-    def holds(df: DataFrame): Boolean = {
-      val it = m.values.iterator()
-      while (it.hasNext) if (it.next().peek.exists(_ eq df)) return true
-      false
-    }
-    def invalidate(): Unit = {
-      m.values.forEach(_.release())
-      m.clear()
-    }
-  }
-
-  private val pairsMemo = new ArtifactMemo
+  /** The verified near-dup pair table ([[minhashLsh]]): a result in
+    * its own right and the input of cluster assignment and
+    * contamination reporting — the table a deployment writes once. */
+  private[graft] val pairs = Artifacts[DataFrame]("dedup.pairs")
   def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.get(spark, dir)(minhashLsh(spark, dir).persist())
+    pairs.get(spark, dir)(minhashLsh(spark, dir).persist())
 
-  /** Cluster labels, memoized like [[verifiedPairs]]: q45 emits them,
-    * q59's survivor selection and q64's training corpus consume them —
-    * the second shared dedup artifact (a deployment writes the label
-    * table once and joins it from every downstream policy). */
-  private val clustersMemo = new ArtifactMemo
+  /** Cluster labels over [[verifiedPairs]]: a deployment writes the
+    * label table once and joins it from every downstream policy. */
+  private[graft] val clusters = Artifacts[DataFrame]("dedup.clusters")
   def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    clustersMemo.get(spark, dir)(dupClusters(spark, dir))
+    clusters.get(spark, dir)(dupClusters(spark, dir))
 
   /** q164's portable hash family: [[CalHashes]] universal hashes
     * h_i(x) = (a_i·x + b_i) mod p over p = 2³¹−1, coefficients drawn
@@ -712,23 +653,9 @@ object DedupOps {
          |  WHERE rn <= $CalBlockCap),
          |""".stripMargin, "scal")
 
-  /** Whether `df` IS a live memoized shared artifact (reference
-    * identity): the pair table (q42/q45/q54) or the cluster-label table
-    * (q45/q59/q64). Bench uses this to release each query's persisted
-    * result without dropping what later queries deliberately reuse. */
-  private[graft] def isSharedArtifact(df: DataFrame): Boolean =
-    pairsMemo.holds(df) || clustersMemo.holds(df) ||
-      containExMemo.holds(df) || spanWinMemo.holds(df)
-
-  /** Drop EVERY memoized shared artifact — pair tables AND cluster
-    * labels — and unpersist their blocks; for tests and long-lived JVMs
-    * done with dedup work. */
-  def invalidateSharedArtifacts(): Unit = {
-    pairsMemo.invalidate()
-    clustersMemo.invalidate()
-    containExMemo.invalidate()
-    spanWinMemo.invalidate()
-  }
+  /** Forwards kept for the benchmark harness; use [[Artifacts]]. */
+  private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
+  def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
   /** Duplicate-cluster assignment: connected components over the
     * verified near-dup pair graph ([[minhashLsh]] output == exact
@@ -1407,19 +1334,16 @@ object DedupOps {
     * cache write/read of ~50-byte strings beats the codegen explode
     * it saves — q73-as-wide-payer measured 4.8 s against 3.8 s live),
     * while the all-primitive table caches and re-reads for near
-    * nothing. Hash-keyed consumers (q74/q75/q77/q139) ride it; the
-    * two whose REPORT is the gram text (q73, q81) keep the live text
-    * explode — their output needs the strings, so a cache could only
-    * move their cost, not remove it. q74 is the number-ordered first
-    * consumer and pays the one explode (Bench payer-pair asserted).
-    * ~400k rows / ~10 MB at sf0.1, linear in corpus tokens: at 100 TB
+    * nothing. The two queries whose REPORT is the gram text (q73, q81)
+    * keep the live text explode — their output needs the strings, so
+    * a cache could only move their cost, not remove it. ~400k rows / ~10 MB at sf0.1, linear in corpus tokens: at 100 TB
     * this is the window-hash table a deployment writes to storage
     * once — which is exactly the serving shape the span index
     * ([[graft.queries.FusionOps]] / q173) already implements. */
-  private val spanWinMemo = new ArtifactMemo
+  private[graft] val spanWindows = Artifacts[DataFrame]("dedup.span_windows")
   private[graft] def spanWindowTable(spark: SparkSession,
       dir: String): DataFrame =
-    spanWinMemo.get(spark, dir) {
+    spanWindows.get(spark, dir) {
       val w = spanWindowHashes(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")),
         k = 8).persist()
@@ -1858,48 +1782,59 @@ object DedupOps {
       Some(clusterChainAuditSql),
       "transitive-chaining audit per cluster size: direct verified " +
         "pairs vs transitivity-implied pairs with integer implied-" +
-        "share ppm — when to distrust connected-component dedup"),
+        "share ppm — when to distrust connected-component dedup",
+      rides = Seq(clusters, pairs)),
     Q("q150_cross_source_matrix", crossSourceMatrix,
       Some(crossSourceMatrixSql),
       "source x source near-dup contamination matrix over the " +
         "memoized verified-pair table: pair + distinct-doc counts per " +
-        "lexically-ordered source cell — mirror/scraper detection"),
+        "lexically-ordered source cell — mirror/scraper detection",
+      rides = Seq(pairs)),
     Q("q73_dup_ngrams", dupNgrams, Some(dupNgramsSql),
       "sub-document dedup: cross-document duplicated 8-token spans " +
         "(rolling windows, two-level hash agg — no pairwise compare)"),
     Q("q74_span_scrub", scrubSpans, Some(scrubSpansSql),
       "decontamination span scrubbing: rewrite every doc with " +
         "cross-doc duplicated 8-windows removed (union coverage, " +
-        "order-preserving rebuild, one row per input doc)"),
+        "order-preserving rebuild, one row per input doc)",
+      pays = Seq(spanWindows)),
     Q("q75_span_dedup", dedupSpans, Some(dedupSpansSql),
       "keep-one-copy span dedup (Lee et al. form): canonical " +
         "min(doc_id, pos) occurrence survives per duplicated span, " +
-        "all others removed"),
+        "all others removed",
+      rides = Seq(spanWindows)),
     Q("q77_span_stats", spanStats, Some(spanStatsSql),
       "per-doc duplication quality signal: window count + cross-doc " +
-        "duplicated-window count, zeros preserved for every input doc"),
+        "duplicated-window count, zeros preserved for every input doc",
+      rides = Seq(spanWindows)),
     Q("q98_similar_neighbors", similarNeighbors(_, _),
       Some(similarNeighborsSql),
       "per-doc top-3 verified near-duplicates by exact Jaccard — the " +
-        "related-items view of the memoized pair table"),
+        "related-items view of the memoized pair table",
+      rides = Seq(pairs)),
     Q("q97_dup_pagerank", dupPagerank(_, _), Some(dupPagerankSql),
       "integer-exact 3-round PageRank over the near-dup graph: which " +
-        "documents are the boilerplate hubs; one lazy plan, no floats"),
+        "documents are the boilerplate hubs; one lazy plan, no floats",
+      rides = Seq(pairs)),
     Q("q109_triangle_counts", triangleCounts, Some(triangleCountsSql),
       "degree-oriented triangle counting over the near-dup graph: " +
-        "per-doc 3-clique participation, wedge join bounded O(m^1.5)"),
+        "per-doc 3-clique participation, wedge join bounded O(m^1.5)",
+      rides = Seq(pairs)),
     Q("q117_kcore", kCore(_, _), Some(kCoreSql),
       "2-core membership by bulk peeling on the iterate harness: the " +
-        "dup graph minus its tree-like fringe, convergence-asserted"),
+        "dup graph minus its tree-like fringe, convergence-asserted",
+      rides = Seq(pairs)),
     Q("q78_cluster_sizes", clusterSizes, Some(clusterSizesSql),
       "dedup audit report: duplicate-cluster size distribution over " +
-        "the memoized q45 labels (singletons included)"),
+        "the memoized q45 labels (singletons included)",
+      rides = Seq(clusters, pairs)),
     Q("q143_survivor_policies", survivorPolicies,
       Some(survivorPoliciesSql),
       "survivor-policy A/B: keep-longest vs keep-shortest vs " +
         "keep-first over the same cluster labels — kept chars and " +
         "disagreement counts, three struct argmins in one " +
-        "HashAggregate"),
+        "HashAggregate",
+      rides = Seq(clusters, pairs)),
     Q("q40_exact_dedup", exactDedup, Some(exactDedupSql),
       "normalize+md5 exact dedup, deterministic survivor"),
     Q("q195_containment_pairs", containmentPairs,
@@ -1907,7 +1842,8 @@ object DedupOps {
       "asymmetric containment dedup: |A∩B|/|A| >= 0.8 pairs over " +
         "df-capped shared-shingle candidates — catches the quoted-" +
         "whole-inside case symmetric Jaccard dilutes away; asym_only " +
-        "bit marks pairs every symmetric pass would miss"),
+        "bit marks pairs every symmetric pass would miss",
+      pays = Seq(containEx)),
     Q("q41_jaccard_pairs", jaccardPairs, Some(jaccardPairsSql),
       "exact token-set Jaccard near-dup, source-blocked (verification spec)"),
     Q("q38_jaccard_prefix", jaccardPairsPrefix, Some(jaccardPairsSql),
@@ -1926,17 +1862,22 @@ object DedupOps {
         "cap bounding every block — O(drawn blocks x cap^2) at any " +
         "corpus size, same oracle measurement over the same sample"),
     Q("q42_minhash_lsh", verifiedPairs, Some(minhashLshSql),
-      "MinHash 62-hash/31-band LSH + exact verification == global shingle J>=0.5"),
+      "MinHash 62-hash/31-band LSH + exact verification == global shingle J>=0.5",
+      pays = Seq(pairs)),
     Q("q45_dup_clusters", clusterLabels, Some(dupClustersSql),
       "connected components over the verified dup-pair graph: min-label " +
-        "propagation vs a recursive-CTE oracle"),
+        "propagation vs a recursive-CTE oracle",
+      pays = Seq(clusters),
+      rides = Seq(pairs)),
     Q("q105_dup_clusters_star", dupClustersStar, Some(dupClustersSql),
       "same labels via large-star/small-star contraction — O(log n) " +
         "rounds on any graph shape (the long-chain-safe alternative), " +
-        "hash-proven equal on q45's own oracle"),
+        "hash-proven equal on q45's own oracle",
+      rides = Seq(pairs)),
     Q("q59_dedup_corpus", dedupCorpus, Some(dedupCorpusSql),
       "the deduplicated corpus: one survivor per cluster by keep-longest " +
-        "policy (n_chars desc, doc_id tie-break) over the shared labels"),
+        "policy (n_chars desc, doc_id tie-break) over the shared labels",
+      rides = Seq(clusters, pairs)),
     Q("q43_simhash_signatures", simhashSignatures, Some(simhashSignaturesSql),
       "codegen simhash64 over portable md5-derived 60-bit term hashes — " +
         "signature bits oracle-checked exactly"),

@@ -616,7 +616,8 @@ object DedupFusionOps {
       "dedup-ensemble attribution: per detector, edges contributed " +
         "to the q132 union graph and edges NO other detector found " +
         "— the keep-or-retire report for each signal, bounded 3-row " +
-        "output over the already-mined edge sets"),
+        "output over the already-mined edge sets",
+      rides = Seq(DedupOps.pairs)),
     Q("q129_edit_verified", editVerified, Some(editVerifiedSql),
       "edit-distance verification of SimHash candidates: exact " +
         "Levenshtein similarity over candidate pairs only (never " +
@@ -631,11 +632,13 @@ object DedupFusionOps {
         "sort or aggregate"),
     Q("q132_fusion_clusters", fusionClusters, Some(fusionClustersSql),
       "multi-signal dedup fusion: one cluster id over the union of " +
-        "exact, MinHash and SimHash edges via large-star/small-star"),
+        "exact, MinHash and SimHash edges via large-star/small-star",
+      rides = Seq(DedupOps.pairs)),
     Q("q139_novelty_score", noveltyScore, Some(noveltyScoreSql),
       "window-novelty of the delta batch: percent of each new doc's " +
         "8-token windows unseen in the standing corpus — the " +
-        "stitched-boilerplate curation metric, equi-join-shaped"),
+        "stitched-boilerplate curation metric, equi-join-shaped",
+      rides = Seq(DedupOps.spanWindows)),
     // q172/q173 — the INDEXED serving twins (VERDICT r11 #6): same
     // answers as q130/q139 (same oracles; live==indexed is also
     // spec-asserted), but the corpus side reads the persisted index
@@ -646,11 +649,13 @@ object DedupFusionOps {
       Some(deltaDedupSql),
       "q130 answered FROM the persisted LSH band+shingle index: delta " +
         "lifted live, corpus side a storage read — the per-ingest " +
-        "deployment cost, same oracle as the live form"),
+        "deployment cost, same oracle as the live form",
+      rides = Seq(ServingIndexes.lshIndex)),
     Q("q173_novelty_served",
       (s, d) => noveltyScoreIndexed(s, d, ServingIndexes.spanIndex(s, d)),
       Some(noveltyScoreSql),
       "q139 answered FROM the persisted span-hash index: delta " +
         "windows hashed live and left-joined against the stored " +
-        "8-byte key table, corpus text never re-read"))
+        "8-byte key table, corpus text never re-read",
+      rides = Seq(ServingIndexes.spanIndex)))
 }

@@ -303,29 +303,20 @@ object KnnGraphOps {
     (rounds, converged)
   }
 
-  /** The family's shared artifact: the finished k-NN graph, built once
-    * per (context, dataset) — q198 emits it, q199's clustering and
-    * q200's audit consume it, exactly the table a deployment persists
-    * beside its other serving indexes. */
-  private val graphMemo = new DedupOps.ArtifactMemo
+  /** The finished k-NN graph as an [[Artifact]] — the table a
+    * deployment persists beside its other serving indexes. */
+  private[graft] val graph = Artifacts[DataFrame]("graph.knn")
   private[graft] def knnGraphTable(spark: SparkSession,
       dir: String): DataFrame =
-    graphMemo.get(spark, dir) {
+    graph.get(spark, dir) {
       val g = nnDescentOf(Tables(spark, dir, "embeddings")).persist()
       g.count() // materialize: consumed from both sides of self-joins
       g
     }
 
-  private[graft] def isSharedArtifact(df: DataFrame): Boolean =
-    graphMemo.holds(df) || routeMemo.holds(df) ||
-      searchMemo.holds(df) || exactMemo.holds(df)
-
-  def invalidateSharedArtifacts(): Unit = {
-    graphMemo.invalidate()
-    routeMemo.invalidate()
-    searchMemo.invalidate()
-    exactMemo.invalidate()
-  }
+  /** Forwards kept for the benchmark harness; use [[Artifacts]]. */
+  private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
+  def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
   /** q198 — the k-NN graph itself, rank-numbered per node. */
   def nnDescentGraph(spark: SparkSession, dir: String): DataFrame = {
@@ -907,7 +898,7 @@ object KnnGraphOps {
     * independent of corpus size, the number an online ANN service
     * pays. */
   def graphSearch(spark: SparkSession, dir: String): DataFrame =
-    searchMemo.get(spark, dir) {
+    search.get(spark, dir) {
       val r = graphSearchIndexed(spark, dir,
         ServingIndexes.knnCorpusGraphIndex(spark, dir)).persist()
       r.count() // materialize: q205 emits it, q206's audit reads it
@@ -981,50 +972,34 @@ object KnnGraphOps {
     * query_id, the batch-serving shape. Output (query_id, rank,
     * nb_id), top-5 per query in q205's exact ranking. */
   def graphSearchFleet(spark: SparkSession, dir: String): DataFrame =
-    fleetRouteShared(spark, dir, SeedSalts)
+    fleetRouteShared(spark, dir, seedRoute, SeedSalts)
 
-  /** The serving tier's ROUTE as a shared artifact (one entry per salt
-    * list): q207/q209 emit it and q208/q210's audits read the SAME
-    * served rows — a deployment audits what the tier actually
-    * returned, it does not re-route (the q198→q200 attribution rule
-    * applied to serving; payer-before-rider enforced in Bench). ONLY
+  /** The serving tier's ROUTE as a shared artifact, one per salt list:
+    * the audits read the SAME served rows — a deployment audits what
+    * the tier actually returned, it does not re-route. ONLY
     * these registry wrappers over the shared [[ServingIndexes]] path
     * memoize — the `*Indexed` forms (specs, stress, the ingest tick
     * gauging a LIVE index it mutates between calls) always compute
     * fresh, so a mutated index can never serve a stale route. */
-  private val routeMemo = new DedupOps.ArtifactMemo
-  private val searchMemo = new DedupOps.ArtifactMemo
-  private val exactMemo = new DedupOps.ArtifactMemo
+  private[graft] val seedRoute = Artifacts[DataFrame]("graph.route.seed")
+  private[graft] val wideRoute = Artifacts[DataFrame]("graph.route.wide")
+  private[graft] val search = Artifacts[DataFrame]("graph.search")
+  private[graft] val exactArm = Artifacts[DataFrame]("graph.exact")
 
   /** The standing-corpus row count — the bucket-count PARAMETER every
-    * route derives (`corpus.count() / SeedBucketSize`). One scalar per
-    * (context, dataset), memoized like the table artifacts (q202 pays
-    * the first read in its timed region; q205/q207/q209's route
-    * builds ride): the corpus slice of a dataset is immutable within
-    * a session — the ingest tick mutates its INDEX, never the
-    * embeddings table — so re-running the count job per route build
-    * bought nothing. (A bare map, not an [[DedupOps.ArtifactMemo]]:
-    * the memo's Cell indirection exists to keep Spark jobs out of the
-    * map's bin lock, but a scalar count is exactly the job a racing
-    * second caller SHOULD block on rather than duplicate; the
-    * stopped-context sweep matches the memo's.) */
-  private val corpusCountMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), java.lang.Long]
-  private[graft] def corpusCount(spark: SparkSession, dir: String): Long = {
-    corpusCountMemo.keySet.removeIf(k => k._1.isStopped)
-    corpusCountMemo.computeIfAbsent((spark.sparkContext, dir), _ =>
+    * route derives (`corpus.count() / SeedBucketSize`): the corpus
+    * slice is immutable within a session (the ingest tick mutates its
+    * INDEX, never the embeddings table), so one count serves every
+    * route build. */
+  private[graft] val corpusRows = Artifacts[Long]("graph.corpus_count")
+  private[graft] def corpusCount(spark: SparkSession, dir: String): Long =
+    corpusRows.get(spark, dir)(
       Tables(spark, dir, "embeddings")
         .filter(!isDeltaVec(col("vec_id"))).count())
-  }
-  /** Unambiguous memo key over (dir, salt list): each component is
-    * length-prefixed, so distinct salt lists can never collide the way
-    * a plain delimiter join could (ADVICE r17: Seq("a,b") vs
-    * Seq("a","b"), or a '#' inside dir shifting the boundary). */
-  private def routeKey(dir: String, salts: Seq[String]): String =
-    (dir +: salts).map(c => s"${c.length}:$c").mkString("|")
+
   private def fleetRouteShared(spark: SparkSession, dir: String,
-      salts: Seq[String]): DataFrame =
-    routeMemo.get(spark, routeKey(dir, salts)) {
+      route: Artifact[DataFrame], salts: Seq[String]): DataFrame =
+    route.get(spark, dir) {
       val r = graphSearchFleetIndexed(spark, dir,
         ServingIndexes.knnCorpusGraphIndex(spark, dir), salts).persist()
       r.count()
@@ -1036,7 +1011,7 @@ object KnnGraphOps {
     * share one artifact per dataset. */
   private def fleetExactShared(spark: SparkSession,
       dir: String): DataFrame =
-    exactMemo.get(spark, dir) {
+    exactArm.get(spark, dir) {
       val e = fleetExactOf(spark, dir, 0L).persist()
       e.count()
       e
@@ -1077,7 +1052,7 @@ object KnnGraphOps {
     * corpus-size-independent; the recall it buys is q210's audit
     * row beside q208's. */
   def graphSearchFleetWide(spark: SparkSession, dir: String): DataFrame =
-    fleetRouteShared(spark, dir, WideSalts)
+    fleetRouteShared(spark, dir, wideRoute, WideSalts)
 
   /** q210 — q208's mean-hit@5 audit over the WIDE-entry route: the
     * pair of rows a deployment reads side by side to decide whether
@@ -1088,7 +1063,7 @@ object KnnGraphOps {
     * total_hits(wide) ≥ total_hits(prod)). */
   def graphFleetRecallWide(spark: SparkSession, dir: String): DataFrame =
     fleetRecallRollup(fleetExactShared(spark, dir),
-      fleetRouteShared(spark, dir, WideSalts))
+      fleetRouteShared(spark, dir, wideRoute, WideSalts))
 
   /** q208 — mean hit@5 of the FLEET search (the audit row the verdict
     * asked for beside q206): for every held-out query, its exact
@@ -1102,7 +1077,7 @@ object KnnGraphOps {
     * scalarRollup exemption, q197's precedent). */
   def graphFleetRecall(spark: SparkSession, dir: String): DataFrame =
     fleetRecallRollup(fleetExactShared(spark, dir),
-      fleetRouteShared(spark, dir, SeedSalts))
+      fleetRouteShared(spark, dir, seedRoute, SeedSalts))
 
   /** q208 against an explicit index path — also the gauge
     * [[graft.VectorIngestMain]]'s tick reads against ITS OWN standing
@@ -1570,71 +1545,90 @@ object KnnGraphOps {
         s"$DescentRounds neighbor-of-neighbor join rounds with " +
         "reverse-degree capping — the join-shaped graph construction " +
         "HNSW-class indexes start from, linear candidate volume per " +
-        "round"),
+        "round",
+      pays = Seq(graph)),
     Q("q199_mutual_knn_clusters", mutualKnnClusters,
       Some(mutualKnnClustersSql),
       "mutual-kNN clustering on the q198 graph: rank-symmetric edges " +
         "(no float threshold), star-contraction components, " +
-        "min-id labels, singletons self-labeled"),
+        "min-id labels, singletons self-labeled",
+      rides = Seq(graph)),
     Q("q200_nn_descent_recall", nnDescentRecall, Some(nnDescentRecallSql),
       "recall@k audit of the q198 graph against exact brute force on " +
         "a deterministic 4% node sample — the convergence curve a " +
-        "deployment reads before trusting the graph"),
+        "deployment reads before trusting the graph",
+      rides = Seq(graph)),
     Q("q201_graph_routed_ann",
       (s, d) => graphRoutedAnn(s, d, ServingIndexes.knnGraphIndex(s, d)),
       Some(graphRoutedAnnSql),
       "ANN served by ROUTING the persisted k-NN graph: 3 point-lookup " +
         "hop joins against the stored edge table, exact scores on the " +
         "<= k+k^2+k^3 visited frontier, q30's rank/ids contract — " +
-        "per-query cost independent of corpus size"),
+        "per-query cost independent of corpus size",
+      rides = Seq(ServingIndexes.knnGraphIndex)),
     Q("q202_graph_delta_insert", graphDeltaInsert,
       Some(graphDeltaInsertSql),
       "HNSW-style incremental insert: the ~10% delta batch gets its " +
         "adjacency by routing the standing corpus graph (salted-bucket " +
         "entry points + 2 out-edge expansions, exact scores on the " +
         "visited set) — the append rows a nightly ingest writes, no " +
-        "rebuild, per-delta cost independent of corpus size"),
+        "rebuild, per-delta cost independent of corpus size",
+      pays = Seq(corpusRows),
+      rides = Seq(ServingIndexes.knnCorpusGraphIndex)),
     Q("q203_graph_hubness", graphHubness, Some(graphHubnessSql),
       "k-occurrence (in-degree) histogram of the q198 graph incl. the " +
         "degree-0 orphan row — the hubness diagnostic for the " +
-        "high-dim pathology the reverse cap bounds"),
+        "high-dim pathology the reverse cap bounds",
+      rides = Seq(graph)),
     Q("q204_route_recall", routeRecall, Some(routeRecallSql),
       "serving-recall audit: for each exact q30 top-5 neighbor, " +
         "whether q201's fixed-hop route retrieved it — hop-budget " +
-        "coverage read separately from q200's graph recall"),
+        "coverage read separately from q200's graph recall",
+      rides = Seq(ServingIndexes.knnGraphIndex)),
     Q("q205_graph_search", graphSearch, Some(graphSearchSql),
       "out-of-corpus graph ANN: a held-out query vector (not an " +
         "indexed node) enters the persisted corpus graph through the " +
         "corpus members of its own two salted seed buckets, expands " +
         s"$RouteHops hops, exact-scores the visited frontier — top-5 " +
-        "in q30's contract, per-query cost independent of corpus size"),
+        "in q30's contract, per-query cost independent of corpus size",
+      pays = Seq(search),
+      rides = Seq(corpusRows, ServingIndexes.knnCorpusGraphIndex)),
     Q("q206_graph_search_recall", graphSearchRecall,
       Some(graphSearchRecallSql),
       "serving-recall audit of the out-of-corpus search: for each of " +
         "the held-out query's exact top-5 corpus neighbors, whether " +
         "q205's bucket-entry route retrieved it — entry-point " +
-        "coverage read separately from q200's graph recall"),
+        "coverage read separately from q200's graph recall",
+      rides = Seq(corpusRows, search, ServingIndexes.knnCorpusGraphIndex)),
     Q("q207_graph_fleet_search", graphSearchFleet,
       Some(graphSearchFleetSql),
       "FLEET out-of-corpus serving: every held-out query routed " +
         "through the persisted corpus graph in one batch — q205's " +
         "body over the whole query table, per-query cost independent " +
-        "of corpus size, embarrassingly parallel by query_id"),
+        "of corpus size, embarrassingly parallel by query_id",
+      pays = Seq(seedRoute),
+      rides = Seq(corpusRows, ServingIndexes.knnCorpusGraphIndex)),
     Q("q208_graph_fleet_recall", graphFleetRecall,
       Some(graphFleetRecallSql),
       "mean hit@5 of the fleet search: exact top-5 per held-out " +
         "query vs the q207 route, one audit row (n_queries, " +
         "total_hits, mean_hits) — the serving tier's expected " +
-        "recall, read beside q206's single-query luck"),
+        "recall, read beside q206's single-query luck",
+      pays = Seq(exactArm),
+      rides = Seq(corpusRows, seedRoute, ServingIndexes.knnCorpusGraphIndex)),
     Q("q209_graph_fleet_wide", graphSearchFleetWide,
       Some(graphSearchFleetWideSql),
       "fleet search at WIDE entry: a third independent salted " +
         "bucketing per query (query-side only — no index change), " +
         "the EntryWidthAb lever productized; candidate bound " +
-        "3·bucket·(1+k+k²+k³), still corpus-size-independent"),
+        "3·bucket·(1+k+k²+k³), still corpus-size-independent",
+      pays = Seq(wideRoute),
+      rides = Seq(corpusRows, ServingIndexes.knnCorpusGraphIndex)),
     Q("q210_graph_fleet_wide_recall", graphFleetRecallWide,
       Some(graphFleetRecallWideSql),
       "mean hit@5 of the wide-entry fleet — q208's audit row for " +
         "q209, the side-by-side pair that prices the third salt; " +
-        "monotone ≥ q208 by construction (entry only adds candidates)"))
+        "monotone ≥ q208 by construction (entry only adds candidates)",
+      rides = Seq(corpusRows, exactArm, wideRoute,
+        ServingIndexes.knnCorpusGraphIndex)))
 }

@@ -304,35 +304,38 @@ object PipelineOps {
     (merges.result(), fin)
   }
 
-  /** Memoized merge table per (context, dataset, rounds) — the mined
-    * merges are a tiny deterministic DRIVER value (N rows), so unlike
-    * the DataFrame artifact memos there are no blocks to manage; q101
-    * pays the mining loop, q106's tokenizer application rides it
-    * (payer-before-rider in Bench). Entries for stopped contexts are
-    * evicted on access, the ArtifactMemo rule. */
-  private val bpeMergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Int, Int, Int),
-    Vector[BpeMerge]]
+  /** The mined merge tables (one merge per round, and [[BpeWideM]]
+    * per round) — tiny deterministic DRIVER values with no blocks to
+    * release. */
+  private[graft] val bpeMerges =
+    Artifacts[Vector[BpeMerge]]("pipeline.bpe_merges")
+  private[graft] val bpeWideMerges =
+    Artifacts[Vector[BpeMerge]]("pipeline.bpe_merges_wide")
 
-  private[graft] def minedMerges(spark: SparkSession, dir: String,
-      nMerges: Int, mergesPerRound: Int = 1,
-      sentinelBase: Int = 1): Vector[BpeMerge] = {
-    bpeMergeMemo.keySet.removeIf(_._1.isStopped)
-    bpeMergeMemo.computeIfAbsent(
-      (spark.sparkContext, dir, nMerges, mergesPerRound, sentinelBase), _ => {
-      val (merges, fin) =
-        // fanned read (guide §2.5): every round re-scans the previous
-        // round's checkpointed segmentation, which inherits the scan's
-        // partitioning — a single-split documents file would serialize
-        // ALL N mining scans (identity at production scale)
-        bpeMineOf(Tables.fanned(spark, dir, "documents"), nMerges,
-          mergesPerRound, sentinelBase)
-      // the final re-segmentation is not consumed here — release the
-      // checkpoint blocks backing it
-      fin.unpersist()
-      graft.operators.Operators.releaseCheckpointBlocks(fin)
-      merges
-    })
+  private[graft] def minedMerges(spark: SparkSession,
+      dir: String): Vector[BpeMerge] =
+    bpeMerges.get(spark, dir)(mineMerges(spark, dir, 1, 1))
+
+  private[graft] def minedMergesWide(spark: SparkSession,
+      dir: String): Vector[BpeMerge] =
+    bpeWideMerges.get(spark, dir)(
+      mineMerges(spark, dir, BpeWideM, BpeWideSentinelBase))
+
+  /** [[BpeMergeRounds]] rounds of [[bpeMineOf]] over the corpus. */
+  private def mineMerges(spark: SparkSession, dir: String,
+      mergesPerRound: Int, sentinelBase: Int): Vector[BpeMerge] = {
+    val (merges, fin) =
+      // fanned read (guide §2.5): every round re-scans the previous
+      // round's checkpointed segmentation, which inherits the scan's
+      // partitioning — a single-split documents file would serialize
+      // ALL N mining scans (identity at production scale)
+      bpeMineOf(Tables.fanned(spark, dir, "documents"), BpeMergeRounds,
+        mergesPerRound, sentinelBase)
+    // the final re-segmentation is not consumed here — release the
+    // checkpoint blocks backing it
+    fin.unpersist()
+    graft.operators.Operators.releaseCheckpointBlocks(fin)
+    merges
   }
 
   /** Sentinel decode of a 1-code-point symbol column: chr(i) maps to
@@ -436,7 +439,7 @@ object PipelineOps {
     * the PQ codebooks. */
   def bpeMergeTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    minedMerges(spark, dir, BpeMergeRounds).zipWithIndex
+    minedMerges(spark, dir).zipWithIndex
       .map { case (m, i) => (i + 1L, m.left, m.right, m.cnt) }
       .toDF("rank", "left_sym", "right_sym", "cnt")
   }
@@ -471,8 +474,7 @@ object PipelineOps {
     * that q101's oracle checks every round. */
   def bpeMergeTableWide(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    minedMerges(spark, dir, BpeMergeRounds, BpeWideM, BpeWideSentinelBase)
-      .zipWithIndex
+    minedMergesWide(spark, dir).zipWithIndex
       .map { case (m, i) => (i + 1L, m.round.toLong, m.left, m.right, m.cnt) }
       .toDF("rank", "round", "left_sym", "right_sym", "cnt")
   }
@@ -633,7 +635,7 @@ object PipelineOps {
     * docs with no pre-tokens report zeros via the restore join. */
   def tokenizeCorpus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val merges = minedMerges(spark, dir, BpeMergeRounds)
+    val merges = minedMerges(spark, dir)
     val docs = Tables(spark, dir, "documents")
     val per = docs
       .select($"doc_id", explode(
@@ -1696,35 +1698,22 @@ object PipelineOps {
     * artifacts the component queries already pay for; the cluster-size
     * rollup is one partial-aggregatable shuffle on cluster_id.
     *
-    * Shipped as a shared artifact through [[lineageMemo]] below —
+    * Shipped as a shared artifact through [[lineage]] below —
     * [[docLineage]] is the memoized read, [[docLineageBuild]] the
     * build. */
-  /** The lineage and DSIR gate tables as shared artifacts (VERDICT
-    * r12 watch item — q155 composed its three member gates LIVE,
-    * 3.7 s of member re-derivation per run): a deployment writes each
-    * per-document gate table once and every policy joins it, so q93
-    * pays the lineage build and q155 rides; q151 pays the DSIR
-    * weights and q165/q155 ride (numeric bench order 93 < 151 <
-    * 155 < 165 already puts every payer first). The
-    * [[DedupOps.ArtifactMemo]] contract throughout: keyed per
-    * (context, dataset), eagerly materialized (the q126
-    * concurrent-broadcast lesson), registered with Bench's release
-    * policy via [[isSharedArtifact]]. */
-  private val lineageMemo = new DedupOps.ArtifactMemo
-  private val dsirMemo = new DedupOps.ArtifactMemo
-  private[queries] val fhMemo = new DedupOps.ArtifactMemo
+  /** The lineage and DSIR gate tables as shared [[Artifact]]s: a
+    * deployment writes each per-document gate table once and every
+    * policy joins it. Eagerly materialized (the q126
+    * concurrent-broadcast lesson). */
+  private[graft] val lineage = Artifacts[DataFrame]("pipeline.lineage")
+  private[graft] val dsir = Artifacts[DataFrame]("pipeline.dsir_weights")
 
-  private[graft] def isSharedArtifact(df: DataFrame): Boolean =
-    lineageMemo.holds(df) || dsirMemo.holds(df) || fhMemo.holds(df)
-
-  def invalidateSharedArtifacts(): Unit = {
-    lineageMemo.invalidate()
-    dsirMemo.invalidate()
-    fhMemo.invalidate()
-  }
+  /** Forwards kept for the benchmark harness; use [[Artifacts]]. */
+  private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
+  def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
   def docLineage(spark: SparkSession, dir: String): DataFrame =
-    lineageMemo.get(spark, dir) {
+    lineage.get(spark, dir) {
       val df = docLineageBuild(spark, dir).persist()
       df.count()
       df
@@ -2220,7 +2209,7 @@ object PipelineOps {
     * left-join keeps zero-feature docs as rows. Products stay under
     * 2⁶³ through ~10¹² raw tokens; DECIMAL past that. */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirMemo.get(spark, dir) {
+    dsir.get(spark, dir) {
       // the feature frame feeds BOTH the bucket-count aggregation and
       // the per-doc rollup — un-persisted, the bigram explode + per-
       // gram md5 corpus pass ran twice per build (r18; the q177 "one
@@ -2444,17 +2433,15 @@ object PipelineOps {
     * hash-checked. Scale shape: one scan, one partial-aggregatable
     * count shuffle on (doc_id, dim); long-form output keeps the row
     * width fixed at any dimensionality. */
-  /** Memoized per (context, dataset) — the hashed-features table is
-    * the single most re-derived frame in the registry (q69 emits it;
-    * q72's scorer, q177's trainer, and the whole [[VectorOps
-    * .docVectors]] stack densify it), and a deployment writes it to
-    * storage exactly once. Same [[DedupOps.ArtifactMemo]] contract as
-    * every shared artifact: q69 pays the corpus pass inside its timed
-    * region (payer-before-rider asserted in Bench), the memo is
+  /** The hashed-features table as an [[Artifact]] — the most
+    * re-derived frame in the registry (the scorer, the trainer and
+    * the whole [[VectorOps.docVectors]] stack read it). The memo is
     * spec-pinned row-identical to the fresh [[featureHashOf]]
     * computation, and the streaming/spec `*Of` forms stay fresh. */
+  private[graft] val featureHashes =
+    Artifacts[DataFrame]("pipeline.feature_hash")
   def featureHash(spark: SparkSession, dir: String): DataFrame =
-    fhMemo.get(spark, dir) {
+    featureHashes.get(spark, dir) {
       // fanned read (guide §2.5): the explode + per-token md5 map work
       // runs in the scan's partitions — serial on a single-split file
       val fh = featureHashOf(Tables.fanned(spark, dir, "documents"))
@@ -3735,29 +3722,36 @@ object PipelineOps {
         "once, point many"),
     Q("q69_feature_hash", featureHash, Some(featureHashSql),
       "hashing-trick vectorization: sparse 64-dim term-count vectors, " +
-        "integer-exact dims and weights (long form)"),
+        "integer-exact dims and weights (long form)",
+      pays = Seq(featureHashes)),
     Q("q72_hashed_scorer", hashedScore, Some(hashedScoreSql),
       "linear-classifier inference over hashed features: broadcast " +
-        "weight table, partial-aggregatable integer score + decision"),
+        "weight table, partial-aggregatable integer score + decision",
+      rides = Seq(featureHashes)),
     Q("q177_perceptron_train", perceptronTrain, Some(perceptronTrainSql),
       "classifier TRAINING in the engine: annealed mean-normalized " +
         "batch perceptron over the q69 hashed features, recovering " +
         "the q72 scorer's decision boundary (realizable teacher -> " +
         "the trainer is auditable; 500 -> 51 errors in 8 rounds) — " +
         "integer-exact weight trajectory hash-checked against " +
-        "unrolled CTE rounds"),
+        "unrolled CTE rounds",
+      rides = Seq(featureHashes)),
     Q("q65_mixture_sample", mixtureSample(_, _), Some(mixtureSampleSql),
       "target-proportion training-mix sampler: data-derived per-stratum " +
         "rates, integer-exact deterministic membership"),
     Q("q64_training_corpus", trainingCorpus, Some(trainingCorpusSql),
       "the training-ready corpus: dedup survivors x language x integer-" +
-        "exact quality gates — the shipped end artifact"),
+        "exact quality gates — the shipped end artifact",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q54_contamination", contamination, Some(contaminationSql),
-      "cross-source duplicate/contamination report via fingerprint join"),
+      "cross-source duplicate/contamination report via fingerprint join",
+      rides = Seq(DedupOps.pairs)),
     Q("q155_admission_matrix", admissionMatrix, Some(admissionMatrixSql),
       "the per-document decision table: all five gate signals " +
         "(survivor, quality, decon, calibrated, DSIR) + vote count + " +
-        "strict admit, oracle-proven equal to its member queries"),
+        "strict admit, oracle-proven equal to its member queries",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs, dsir, lineage,
+        TextOps.calibrated)),
     Q("q161_attention_spans", attentionSpans, Some(attentionSpansSql),
       "block-diagonal attention-span table: per training sequence, " +
         "the documents inside it with in-sequence offset/length and " +
@@ -3771,13 +3765,15 @@ object PipelineOps {
       "DSIR-style importance weights: add-one-smoothed target/raw " +
         "probability ratio over hashed bigram features, integer ppm, " +
         "mean per doc + admit flag — data selection toward the " +
-        "benchmark slice's distribution"),
+        "benchmark slice's distribution",
+      pays = Seq(dsir)),
     Q("q149_repetition_schedule", repetitionSchedule,
       Some(repetitionScheduleSql),
       "per-document epoch/repeat schedule equalizing each source's " +
         "token mass to a target budget: integer full-epochs + md5-" +
         "deterministic token-prefix remainder — one formula does both " +
-        "down-sampling and low-resource epoching"),
+        "down-sampling and low-resource epoching",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q46_hash_sample", hashSample, Some(hashSampleSql),
       "deterministic md5-prefix sampling (reproducible, shuffle-free)"),
     Q("q56_stratified_sample", stratifiedSample, Some(stratifiedSampleSql),
@@ -3793,18 +3789,21 @@ object PipelineOps {
     Q("q101_bpe_merge_table", bpeMergeTable, Some(bpeMergeTableSql),
       "BPE merge mining to 5 rounds on the shared iterate harness: " +
         "the tokenizer-training merge table, oracle-checked against " +
-        "five unrolled in-SQL rounds"),
+        "five unrolled in-SQL rounds",
+      pays = Seq(bpeMerges)),
     Q("q147_bpe_wide_merges", bpeMergeTableWide, Some(bpeMergeTableWideSql),
       "BPE training at scale: top-8 pairwise-disjoint merges per " +
         "round, one chained re-segmentation — 40 merges in 5 corpus " +
         "scans; selection policy pinned twice: an independent " +
         "in-memory reference implementation in the spec, and an " +
         "unrolled SQL oracle expressing each greedy-disjoint pick as " +
-        "a ranked anti-join against the round's earlier picks"),
+        "a ranked anti-join against the round's earlier picks",
+      pays = Seq(bpeWideMerges)),
     Q("q106_tokenize_corpus", tokenizeCorpus, Some(tokenizeCorpusSql),
       "apply the trained tokenizer: stateless 5-replace projection " +
         "over every doc's pre-tokens, per-doc integer compression " +
-        "accounting (chars in, symbols out) riding the memoized merges"),
+        "accounting (chars in, symbols out) riding the memoized merges",
+      rides = Seq(bpeMerges)),
     Q("q47_text_clean", textClean, Some(textCleanSql),
       "email/URL/whitespace cleaning via codegen regexp chain"),
     Q("q86_pii_scrub", piiScrub, Some(piiScrubSql),
@@ -3820,33 +3819,41 @@ object PipelineOps {
         "(GPT-3 appendix-C style)"),
     Q("q88_pipeline_yield", pipelineYield, Some(pipelineYieldSql),
       "per-source pipeline yield funnel: raw -> quality -> dedup " +
-        "survivors -> decon-clean, composed from the shipped stages"),
+        "survivors -> decon-clean, composed from the shipped stages",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q90_token_budget", tokenBudget, Some(tokenBudgetSql),
       "per-language token/sequence/padding accounting over the deduped " +
-        "corpus — the number a training run is planned around"),
+        "corpus — the number a training run is planned around",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q102_pack_placements", packPlacements, Some(packPlacementsSql),
       "harmonic-class bin packing (distributed FFD analogue): per-doc " +
         "full-sequence count + tail (bin, slot) placement, one keyed " +
-        "window, deterministic and integer-exact"),
+        "window, deterministic and integer-exact",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q103_packing_budget", packingBudget, Some(packingBudgetSql),
       "greedy-vs-packed padding accounting per language on the same " +
-        "corpus: the measured waste reduction q102's packing buys"),
+        "corpus: the measured waste reduction q102's packing buys",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q104_whatif_admission", whatifAdmission, Some(whatifAdmissionSql),
       "what-if re-admission: shipped vs alternative gate policy " +
         "(relaxed stopword ratio, decon tolerance, new span-quality " +
         "gate) per source with gained/lost deltas — no re-mining, " +
-        "thresholds as literals"),
+        "thresholds as literals",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs, DedupOps.spanWindows)),
     Q("q91_packed_stream", packedStream(_, _), Some(packedStreamSql),
       "GPT-style contiguous token-stream packing within training " +
         "shards: per-doc offset + sequence span, padding only at " +
         "shard ends"),
     Q("q92_leak_safe_split", leakSafeSplit, Some(leakSafeSplitSql),
       "leakage-safe train/valid split: whole dup-clusters assigned to " +
-        "one side, deterministic md5 membership"),
+        "one side, deterministic md5 membership",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q93_doc_lineage", docLineage, Some(docLineageSql),
       "per-document provenance record: near-dup/survivor/quality/" +
         "decon flags + the admitted bit — the pipeline's " +
-        "explainability artifact"),
+        "explainability artifact",
+      pays = Seq(lineage),
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q100_shard_manifest", shardManifest(_, _), Some(shardManifestSql),
       "per-shard loader manifest: doc/token/sequence counts, last " +
         "position, and a sorted member-id digest — re-shard drift " +
@@ -3867,7 +3874,8 @@ object PipelineOps {
     Q("q169_cluster_quality", clusterQuality, Some(clusterQualitySql),
       "near-dup quality contagion: strict-majority cluster vote over " +
         "per-copy quality bits (ties demote), with consensus strength " +
-        "and the overridden rows a gate-tuning review reads"),
+        "and the overridden rows a gate-tuning review reads",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q168_seq_objectives", seqObjectives, Some(seqObjectivesSql),
       "UL2-style per-sequence objective draw: causal/prefix/span in " +
         "2:1:1 by the md5 device, with per-objective parameters " +
@@ -3875,7 +3883,8 @@ object PipelineOps {
     Q("q167_loss_weights", lossWeights, Some(lossWeightsSql),
       "dedup-aware count-once loss correction per packed sequence: " +
         "token-weighted mean 1e6/cluster_size discount over the " +
-        "documents inside each training sequence, real tokens only"),
+        "documents inside each training sequence, real tokens only",
+      rides = Seq(DedupOps.clusters, DedupOps.pairs)),
     Q("q166_mix_policy_compare", mixPolicyCompare,
       Some(mixPolicyCompareSql),
       "the three mixing policies (proportional / temperature / " +
@@ -3885,7 +3894,8 @@ object PipelineOps {
       "DSIR importance resampling executed: weight-bin quantization, " +
         "Hamilton bin quotas proportional to weight mass, md5-ordered " +
         "per-bin draw — the deterministic integer form of " +
-        "probability-proportional-to-weight document resampling"),
+        "probability-proportional-to-weight document resampling",
+      rides = Seq(dsir)),
     Q("q163_epoch_shuffle", epochShuffle, Some(epochShuffleSql),
       "deterministic per-epoch loader order: md5-salted within-shard " +
         "permutation of the q91 packed sequences with a round-robin " +
@@ -3907,7 +3917,8 @@ object PipelineOps {
       Some(tokenizerFertilitySql),
       "per-source tokenizer fertility card: symbols per 1000 chars " +
         "and percent saved by the mined merges, integer-exact rollup " +
-        "of the q106 application chain"),
+        "of the q106 application chain",
+      rides = Seq(bpeMerges)),
     Q("q187_snapshot_diff", snapshotDiff, Some(snapshotDiffSql),
       "corpus snapshot CDC: co-partitioned full-outer digest join -> " +
         "added/deleted/changed/unchanged verdicts — the refresh diff " +

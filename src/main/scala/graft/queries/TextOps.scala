@@ -386,33 +386,20 @@ object TextOps {
   def cmSketch(spark: SparkSession, dir: String): DataFrame =
     cmSketchTable(spark, dir)
 
-  /** The corpus sketch as a shared artifact ([[DedupOps.ArtifactMemo]],
-    * the q42/q66 payer-before-rider device): q122 pays the one corpus
-    * scan and persists the ≤1 024-row matrix; q123's point estimates
-    * join the materialization instead of rescanning the corpus — the
-    * operational contract its own doc promises ("the estimate path
-    * never rescans the corpus"). Bench asserts the q122 → q123 order,
-    * so per-query numbers attribute the scan to the payer. */
-  private val cmMemo = new DedupOps.ArtifactMemo
+  /** The ≤1 024-row corpus sketch as a shared [[Artifact]]: point
+    * estimates join the materialization instead of rescanning the
+    * corpus ("the estimate path never rescans the corpus"). */
+  private[graft] val cmMatrix = Artifacts[DataFrame]("text.cm_sketch")
   private[graft] def cmSketchTable(spark: SparkSession,
       dir: String): DataFrame =
-    cmMemo.get(spark, dir)(
+    cmMatrix.get(spark, dir)(
       // fanned read (guide §2.5): the per-token multi-row hashing pass
       // above the scan would otherwise run in a single file split
       cmSketchOf(Tables.fanned(spark, dir, "documents")).persist())
 
-  /** Whether `df` IS the live memoized sketch — Bench's release
-    * policy, same contract as [[DedupOps.isSharedArtifact]]. */
-  private[graft] def isSharedArtifact(df: DataFrame): Boolean =
-    cmMemo.holds(df) || hhMemo.holds(df) || calMemo.holds(df)
-
-  /** Drop the memoized sketches + gate table (tests / long-lived
-    * JVMs). */
-  def invalidateSharedArtifacts(): Unit = {
-    cmMemo.invalidate()
-    hhMemo.invalidate()
-    calMemo.invalidate()
-  }
+  /** Forwards kept for the benchmark harness; use [[Artifacts]]. */
+  private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
+  def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
   private[graft] def cmSketchOf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -553,16 +540,13 @@ object TextOps {
     * modest; the plan shape — broadcast lookup, then filtered
     * exchange — is what scales, and the est/exact columns measure
     * the inflation directly.) */
-  /** q127's pass-1 matrix as a once-per-(context, dataset) artifact
-    * ([[cmMemo]]'s contract): the sketch is write-once by nature — a
-    * deployment builds it in the ingest pass and every heavy-hitter
-    * read rides the materialization. Memoizing pins that attribution
-    * in Bench too: the corpus scan is paid exactly once per JVM, not
-    * once per derivation (VERDICT r11 #3). */
-  private val hhMemo = new DedupOps.ArtifactMemo
+  /** q127's pass-1 matrix as an [[Artifact]]: the sketch is write-once
+    * by nature — a deployment builds it in the ingest pass and every
+    * heavy-hitter read rides the materialization. */
+  private[graft] val hhSketch = Artifacts[DataFrame]("text.hh_sketch")
   private[graft] def hhSketchTable(spark: SparkSession,
       dir: String): DataFrame =
-    hhMemo.get(spark, dir) {
+    hhSketch.get(spark, dir) {
       triGrams(Tables(spark, dir, "documents"))
         .select(hhDigest(col("gram")).as("dg"))
         .select(explode(array((0 until HhRows).map(r => struct(
@@ -1297,13 +1281,12 @@ object TextOps {
     * the sketch-sized histogram (the q138 cutoff-bin device, here kept
     * per-source) → percentile and flag are map-side on the per-doc
     * frame. No global window, no per-source sort. */
-  /** The calibrated-gate table as a shared artifact ([[cmMemo]]'s
-    * contract; the PipelineOps lineage/DSIR memos' sibling): q148
-    * pays the build, q155's admission matrix rides. */
-  private val calMemo = new DedupOps.ArtifactMemo
+  /** The calibrated-gate table as a shared [[Artifact]], the
+    * PipelineOps lineage/DSIR tables' sibling. */
+  private[graft] val calibrated = Artifacts[DataFrame]("text.calibrated")
 
   def sourceCalibratedScore(spark: SparkSession, dir: String): DataFrame =
-    calMemo.get(spark, dir) {
+    calibrated.get(spark, dir) {
       val df = sourceCalibratedScoreOf(
         Tables(spark, dir, "documents")).persist()
       df.count()
@@ -1582,7 +1565,8 @@ object TextOps {
       "per-source quality-score calibration: integer percentile of " +
         "each doc's unigram score within its source (per-source " +
         "cutoff-bin device, no window) + the calibrated bottom-30% " +
-        "drop flag"),
+        "drop flag",
+      pays = Seq(calibrated)),
     Q("q138_curriculum_phase", curriculumPhase, Some(curriculumPhaseSql),
       "easy-to-hard curriculum assignment: quintile phase from the " +
         "corpus's own unigram-score histogram (cutoff-bin device, no " +
@@ -1606,14 +1590,17 @@ object TextOps {
         "source, map-side combinable, sketch itself hash-checked"),
     Q("q122_cm_sketch", cmSketch, Some(cmSketchSql),
       "Count-Min 4x256 counter matrix over token occurrences — " +
-        "elementwise-sum mergeable, map-side combinable"),
+        "elementwise-sum mergeable, map-side combinable",
+      pays = Seq(cmMatrix)),
     Q("q123_cm_estimate", cmEstimate, Some(cmEstimateSql),
       "sketch point query: min-over-rows frequency estimate for the " +
-        "q89 terms, broadcast lookup against the 1k-row artifact"),
+        "q89 terms, broadcast lookup against the 1k-row artifact",
+      rides = Seq(cmMatrix)),
     Q("q127_heavy_grams", heavyGrams, Some(heavyGramsSql),
       "two-pass trigram heavy hitters: Count-Min prefilter as a " +
         "broadcast lookup, exact counts for survivors only — the " +
-        "tail never reaches the exchange"),
+        "tail never reaches the exchange",
+      pays = Seq(hhSketch)),
     Q("q120_collocations", collocations, Some(collocationsSql),
       "support-pruned co-occurrence mining with integer overlap " +
         "confidence — Apriori prune before the quadratic pair step"),
@@ -1648,7 +1635,8 @@ object TextOps {
       Some(bm25TopKSql),
       "q89 answered FROM the persisted posting index: query-term " +
         "buckets prune at planning time, df re-derived exactly from " +
-        "the pruned postings — the per-query serving cost"),
+        "the pruned postings — the per-query serving cost",
+      rides = Seq(ServingIndexes.postingIndex)),
     Q("q185_vocab_overlap_sketch", vocabOverlapSketch,
       Some(vocabOverlapSketchSql),
       "pairwise cross-source vocab-overlap sketches: merged q114 HLL " +

@@ -895,20 +895,16 @@ object VectorOps {
 
   /** The two-probe assignment table — (vec_id, embedding, |v|, nearest
     * cell, second-nearest cell, label) from ONE scan of the embeddings
-    * — memoized per (context, dataset) like [[annIndexTable]]: at
-    * deployment this is THE assignment table a SemDeDup/contrastive
-    * pipeline writes to storage once and every policy joins. q111 pays
-    * the build (Bench payer-order-asserted); q124, q125, q134, q136
-    * and q141 ride it instead of each re-scanning the embeddings and
-    * re-deriving nearest/second-nearest cells and norms (the r10→r11
-    * q125 attribution drill: three arms × full re-derivation was the
-    * stage-count cost, not the dot products). Materialized eagerly —
+    * — an [[Artifact]] like [[annIndexTable]]: at deployment this is
+    * THE assignment table a SemDeDup/contrastive pipeline writes to
+    * storage once and every policy joins, instead of each re-scanning
+    * the embeddings and re-deriving cells and norms. Materialized eagerly —
     * the q126 lesson: concurrent broadcast-exchange futures against a
     * lazy persist each race the whole lineage. */
-  private val probeAsgMemo = new DedupOps.ArtifactMemo
+  private[graft] val probeAsg = Artifacts[DataFrame]("vector.probe_assignment")
   private[graft] def probeAssignment(spark: SparkSession,
       dir: String): DataFrame =
-    probeAsgMemo.get(spark, dir) {
+    probeAsg.get(spark, dir) {
       import spark.implicits._
       import graft.functions.VectorExpressions.{fvecDot, nearestIndex,
         secondNearestIndex}
@@ -1353,46 +1349,29 @@ object VectorOps {
     * scan of the embeddings — memoized per (context, dataset) like
     * [[DedupOps.verifiedPairs]]: a deployment writes this table once
     * (64× smaller than the vectors) and every search scans IT, never
-    * the embeddings. q66 emits it; q67 (ADC) and q68 (IVF-PQ) ride the
-    * materialization — which also skips re-analyzing the large
-    * quantizer expression trees per query (driver-side planning cost
-    * measured at ~2 s each at sf0.1). */
-  private val indexMemo = new DedupOps.ArtifactMemo
+    * the embeddings. Reading the materialization also skips
+    * re-analyzing the large quantizer expression trees per query
+    * (driver-side planning cost measured at ~2 s each at sf0.1). */
+  private[graft] val annIndex = Artifacts[DataFrame]("vector.ann_index")
   private[graft] def annIndexTable(spark: SparkSession, dir: String): DataFrame =
-    indexMemo.get(spark, dir)(
+    annIndex.get(spark, dir)(
       withPqCode(withGridCell(Tables(spark, dir, "embeddings")))
         .select(col("vec_id"), col("cell"), col("code")).persist())
 
   /** The DOC-vector sibling of [[annIndexTable]] — (vec_id, cell,
-    * packed PQ code) over the q69→q70 document vectors, memoized for
-    * the retrieval stack: q156's vector arm, q158's multi-query
-    * serve, and q194's eval (which replays q156) all scan THIS table;
-    * un-memoized each paid the full text→vector→grid→PQ lift per
-    * query (~13 s of the q194 10× stress run was exactly this). */
-  private val docIndexMemo = new DedupOps.ArtifactMemo
+    * packed PQ code) over the q69→q70 document vectors: the retrieval
+    * stack scans THIS table instead of paying the full
+    * text→vector→grid→PQ lift per query. */
+  private[graft] val docAnnIndex = Artifacts[DataFrame]("vector.doc_ann_index")
   private[graft] def docAnnIndexTable(spark: SparkSession,
       dir: String): DataFrame =
-    docIndexMemo.get(spark, dir)(
+    docAnnIndex.get(spark, dir)(
       withPqCode(withGridCell(docVectors(spark, dir)))
         .select(col("vec_id"), col("cell"), col("code")).persist())
 
-  /** Whether `df` IS the live memoized ANN index (reference identity) —
-    * Bench's release policy, same contract as
-    * [[DedupOps.isSharedArtifact]]. */
-  private[graft] def isSharedArtifact(df: DataFrame): Boolean =
-    indexMemo.holds(df) || hardNegMemo.holds(df) ||
-      probeAsgMemo.holds(df) || bitextMemo.holds(df) ||
-      docIndexMemo.holds(df) || docVecMemo.holds(df)
-
-  /** Drop the memoized artifacts (tests / long-lived JVMs). */
-  def invalidateSharedArtifacts(): Unit = {
-    indexMemo.invalidate()
-    hardNegMemo.invalidate()
-    probeAsgMemo.invalidate()
-    bitextMemo.invalidate()
-    docIndexMemo.invalidate()
-    docVecMemo.invalidate()
-  }
+  /** Forwards kept for the benchmark harness; use [[Artifacts]]. */
+  private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
+  def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
   /** The PQ index-build artifact: every vector's packed code. */
   def pqCodes(spark: SparkSession, dir: String): DataFrame = {
@@ -1564,26 +1543,18 @@ object VectorOps {
     * iterate-harness/BPE precedent. At 100 TB a deployment refines on
     * a hash-sample (q46's device) and assigns the full corpus once —
     * same plan, sampled input. */
-  /** The two-round trained centroid tables, memoized per (context,
-    * dir) — q157 derives them, q159 rides them. A driver-side
-    * PARAMETER artifact (two 16×64 long tables), not a DataFrame, so
-    * this is a plain map with ArtifactMemo's stopped-context eviction
-    * rule rather than a persist/unpersist cell. Payer order (q157
-    * before q159) is asserted in Bench like the other shared
-    * artifacts. */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String),
-    (IndexedSeq[IndexedSeq[Long]], IndexedSeq[IndexedSeq[Long]])]
+  /** The two-round trained centroid tables: a driver-side PARAMETER
+    * [[Artifact]] (two 16×64 long tables) with no blocks to release. */
+  private[graft] val kmeansCentroids = Artifacts[
+    (IndexedSeq[IndexedSeq[Long]], IndexedSeq[IndexedSeq[Long]])](
+    "vector.kmeans_centroids")
 
-  private def refinedCentroidPair(spark: SparkSession, dir: String):
-      (IndexedSeq[IndexedSeq[Long]], IndexedSeq[IndexedSeq[Long]]) = {
-    kmeansMemo.keySet.removeIf(k => k._1.isStopped)
-    kmeansMemo.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private def refinedCentroidPair(spark: SparkSession, dir: String) =
+    kmeansCentroids.get(spark, dir) {
       val emb = Tables(spark, dir, "embeddings")
       val c1 = refineCentroids(emb, ivfGridCentroids())
       (c1, refineCentroids(emb, c1))
-    })
-  }
+    }
 
   def kmeansRefine(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
@@ -2172,19 +2143,14 @@ object VectorOps {
     * small integers, exactly representable in float, so the
     * floor(v×1024) quantization downstream recovers count×1024
     * bit-exactly in both engines. */
-  /** Memoized per (context, dataset) — the densified document-vector
-    * table feeds FIVE registry paths (q70's doc-ANN, q115's SemDeDup,
-    * q126's decon, q156's retrieval index build, q170's bitext build),
-    * each of which previously re-ran the feature-hash + 64-way pivot
-    * corpus pass. A deployment writes this table once (the SemDeDup /
-    * doc-retrieval assignment-table precedent, [[probeAssignment]]);
-    * q70 pays the densify inside its timed region (payer-before-rider
-    * asserted in Bench; the q69 artifact it densifies FROM is paid by
-    * q69), the memo is spec-pinned row-identical to the fresh
+  /** The densified document-vector table as an [[Artifact]]: the
+    * doc-ANN, SemDeDup, decon, retrieval and bitext paths read it
+    * instead of re-running the feature-hash + 64-way pivot corpus
+    * pass. The memo is spec-pinned row-identical to the fresh
     * [[docVectorsOf]] lift, and the `*Of` forms stay fresh. */
-  private val docVecMemo = new DedupOps.ArtifactMemo
+  private[graft] val docVecs = Artifacts[DataFrame]("vector.doc_vectors")
   private[graft] def docVectors(spark: SparkSession, dir: String): DataFrame =
-    docVecMemo.get(spark, dir) {
+    docVecs.get(spark, dir) {
       val v = docVectorsOf(PipelineOps.featureHash(spark, dir)).persist()
       v.count()
       v
@@ -2555,16 +2521,14 @@ object VectorOps {
   private val bitextMiningSql = bitextCtes + "\n" +
     "SELECT a_id, a_lang, b_id, b_lang, d2q FROM cand"
 
-  /** The mined candidate table, memoized per (context, dataset):
-    * q170 is a write-once artifact at deployment (the aligner reads
-    * it; the margin filter reads it once) — q170 pays, q171 rides
-    * (the verifiedPairs idiom). The build materializes the RESULT
-    * through the cached lift, then releases the intermediate — the
-    * memo never traps a persisted lineage it cannot free (the ADVICE
-    * r10 leak, fixed at birth here). */
-  private val bitextMemo = new DedupOps.ArtifactMemo
+  /** The mined candidate table, write-once at deployment (the aligner
+    * reads it; the margin filter reads it once). The build
+    * materializes the RESULT through the cached lift, then releases
+    * the intermediate, so the artifact never traps a persisted
+    * lineage it cannot free. */
+  private[graft] val bitext = Artifacts[DataFrame]("vector.bitext_pairs")
   def bitextPairs(spark: SparkSession, dir: String): DataFrame =
-    bitextMemo.get(spark, dir) {
+    bitext.get(spark, dir) {
       val (res, vecs) = bitextMining(spark, dir)
       val r = res.persist()
       r.count()
@@ -3086,14 +3050,11 @@ object VectorOps {
     * trainer wants surfaced, not papered over. */
   private[queries] val HardNegK = 3
 
-  /** The mined triplet-negative table is a write-once artifact at
-    * deployment (the trainer reads it every epoch; the confusion
-    * report q137 reads it once) — memoized per (context, dataset)
-    * like [[annIndexTable]]: q134 pays the mining, q137 rides
-    * (payer-before-rider order Bench-asserted). */
-  private val hardNegMemo = new DedupOps.ArtifactMemo
+  /** The mined triplet-negative table, write-once at deployment (the
+    * trainer reads it every epoch; the confusion report once). */
+  private[graft] val hardNegs = Artifacts[DataFrame]("vector.hard_negatives")
   def hardNegatives(spark: SparkSession, dir: String): DataFrame =
-    hardNegMemo.get(spark, dir)(mineHardNegatives(spark, dir).persist())
+    hardNegs.get(spark, dir)(mineHardNegatives(spark, dir).persist())
 
   private def mineHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -3659,20 +3620,25 @@ object VectorOps {
     Q("q134_hard_negatives", hardNegatives, Some(hardNegativesSql),
       "contrastive hard-negative mining: per-anchor top-3 cross-label " +
         "neighbors within the integer grid cell, salted sub-blocks, " +
-        "lifted norms — Σ cell² work, never corpus²"),
+        "lifted norms — Σ cell² work, never corpus²",
+      pays = Seq(hardNegs),
+      rides = Seq(probeAsg)),
     Q("q136_triplet_margins", tripletMargins, Some(tripletMarginsSql),
       "FaceNet-style hardest-triplet mining per anchor (hardest " +
         "positive + hardest negative in the grid cell) with the " +
         "margin-violation bit — two partial-aggregatable struct " +
-        "argmins, no window over candidates"),
+        "argmins, no window over candidates",
+      rides = Seq(probeAsg)),
     Q("q137_label_confusion", labelConfusion, Some(labelConfusionSql),
       "class-pair confusion matrix from rank-1 hard negatives with " +
         "integer ppm shares — the embedding-quality triage report, " +
-        "bounded (label, neg_label) output"),
+        "bounded (label, neg_label) output",
+      rides = Seq(hardNegs, probeAsg)),
     Q("q141_embedding_drift", embeddingDrift, Some(embeddingDriftSql),
       "grid-cell occupancy drift of the delta batch vs the standing " +
         "corpus in integer ppm — the distribution-shift detector run " +
-        "before trusting yesterday's ANN index on today's data"),
+        "before trusting yesterday's ANN index on today's data",
+      rides = Seq(probeAsg)),
     Q("q146_chunk_retrieval", chunkRetrieval(_, _), Some(chunkRetrievalSql),
       "RAG retrieval loop at chunk granularity: q144 chunks -> " +
         "row-local hash vectors -> grid+PQ index -> probe-pruned ADC " +
@@ -3692,40 +3658,50 @@ object VectorOps {
       Some(chunkRetrievalSql),
       "q146 answered FROM the persisted chunk index: probed cells " +
         "prune at planning time, codes-only scan, ADC LUT built " +
-        "driver-side — the per-query RAG serving cost"),
+        "driver-side — the per-query RAG serving cost",
+      rides = Seq(ServingIndexes.chunkIndex)),
     Q("q111_semantic_dedup", semanticDedup, Some(semanticDedupSql),
       "SemDeDup: within-grid-cell cosine near-dup detection, " +
-        "lowest-id exemplar survives; per-vector kept/dropped verdict"),
+        "lowest-id exemplar survives; per-vector kept/dropped verdict",
+      pays = Seq(probeAsg)),
     Q("q178_cell_prototypes", cellPrototypes, Some(cellPrototypesSql),
       "per-cell prototype extraction (D4-style diversify): the " +
         "member nearest its cell centroid in quantized integer L2 + " +
         "cell occupancy — the coreset selection primitive, riding " +
-        "the memoized assignment table"),
+        "the memoized assignment table",
+      rides = Seq(probeAsg)),
     Q("q115_doc_semdedup", docSemanticDedup(_, _),
       Some(docSemanticDedupSql),
       "SemDeDup over documents: hashed text vectors, grid cells, " +
-        "integer-exact within-cell L2 — the deployed text form"),
+        "integer-exact within-cell L2 — the deployed text form",
+      rides = Seq(PipelineOps.featureHashes, docVecs)),
     Q("q124_semdedup_probe2", semanticDedupProbe2, Some(semanticDedupProbe2Sql),
       "multi-probe SemDeDup: each vector in its 2 nearest cells " +
         "(integer-exact second-argmin), pairs compared when probe " +
-        "sets intersect — the boundary-recall lever"),
+        "sets intersect — the boundary-recall lever",
+      rides = Seq(probeAsg)),
     Q("q125_probe_recall", probeRecall, Some(probeRecallSql),
       "recall audit of cell-scoped dedup: global exact pair mass vs " +
-        "probe-1 vs probe-2 flagged counts, all integer-exact"),
+        "probe-1 vs probe-2 flagged counts, all integer-exact",
+      rides = Seq(probeAsg)),
     Q("q170_bitext_mining", bitextPairs, Some(bitextMiningSql),
       "cross-lingual near-translation candidates: within-cell pairs " +
         "with differing languages under the q126 distance threshold, " +
         "quantized integer distance in the output — the " +
-        "CCMatrix-style MT-pair miner on the audited SemDeDup shape"),
+        "CCMatrix-style MT-pair miner on the audited SemDeDup shape",
+      pays = Seq(bitext),
+      rides = Seq(PipelineOps.featureHashes, docVecs)),
     Q("q171_bitext_margin", bitextMargin, Some(bitextMarginSql),
       "mutual-best + margin refinement of the bitext candidates: " +
         "rank-1 in both language directions with runner-up distance " +
         "ratios per direction (NULL = no competitor) — the criterion " +
-        "CCMatrix ships pairs under"),
+        "CCMatrix ships pairs under",
+      rides = Seq(PipelineOps.featureHashes, bitext, docVecs)),
     Q("q126_semantic_decon", semanticDecon, Some(semanticDeconSql),
       "cross-corpus semantic decontamination: train docs within " +
         "embedding radius of any held-out eval doc, bipartite " +
-        "salted cell join, integer-exact verdict"),
+        "salted cell join, integer-exact verdict",
+      rides = Seq(PipelineOps.featureHashes, docVecs)),
     Q("q33_ivf_knn", ivfGridKnn(_, _), Some(ivfGridKnnSql),
       "IVF ANN, probe 4/16 cells: integer-exact md5-grid coarse " +
         "quantizer makes the restricted-probe result itself " +
@@ -3752,7 +3728,8 @@ object VectorOps {
       "retrieval eval harness: hits/first-rank/reciprocal-rank (ppm) " +
         "per serving arm (BM25 top-20, hybrid RRF top-10) against a " +
         "data-derived >=2-distinct-terms relevance set — the " +
-        "accept/tune gate beside q83's ANN recall"),
+        "accept/tune gate beside q83's ANN recall",
+      rides = Seq(PipelineOps.featureHashes, docAnnIndex, docVecs)),
     Q("q193_ivf_sq8_ann", ivfSq8Ann, Some(ivfSq8AnnSql),
       "IVF-SQ8 composition: grid probe pruning x integer SQ8 " +
         "distances (FAISS's IVF-SQ shape) — 16x less compression " +
@@ -3762,12 +3739,14 @@ object VectorOps {
       "compressed-domain near-dup shortlist: 50 closest within-cell " +
         "pairs by PQ symmetric distance — candidates from the 64x-" +
         "compressed codes table alone (8 codeword-LUT lookups per " +
-        "pair), the petabyte nightly-dedup candidate generator"),
+        "pair), the petabyte nightly-dedup candidate generator",
+      rides = Seq(annIndex)),
     Q("q191_compression_recall", compressionRecall,
       Some(compressionRecallSql),
       "the compression menu's accuracy column: per-method top-5 " +
         "overlap with exact cosine (grid-IVF prune / PQ ADC / SQ8) " +
-        "— the pick-your-serving-point table, every arm hash-exact"),
+        "— the pick-your-serving-point table, every arm hash-exact",
+      rides = Seq(annIndex)),
     Q("q37_ivf_probe_all", ivfKnnProbeAll, Some(knnTopKSql),
       "IVF ANN with probes==cells: exactness contract hash-checked " +
         "against the brute-force oracle"),
@@ -3778,18 +3757,21 @@ object VectorOps {
       "Lloyd refinement of the IVF coarse quantizer: two integer-" +
         "exact k-means rounds over the md5-seeded grid with per-round " +
         "(cell, occupancy, SSE) — the train-the-centroids convergence " +
-        "audit, oracle-unrolled round for round"),
+        "audit, oracle-unrolled round for round",
+      pays = Seq(kmeansCentroids)),
     Q("q159_refined_recall", refinedRecall, Some(refinedRecallSql),
       "train-and-deploy audit: per-rank probe recall of the 4-probe " +
         "coarse search under seed vs q157-trained centroids against " +
         "the exact q30 top-5 — the recall lift training buys, " +
-        "hash-checked"),
+        "hash-checked",
+      rides = Seq(kmeansCentroids)),
     Q("q197_reindex_decision", reindexDecision, Some(reindexDecisionSql),
       "drift->retrain->reindex verdict: q141 cell-drift ppm vs the " +
         "per-family policy thresholds, gated by q159's trained-vs-seed " +
         "recall audit — rebuild/keep/hold per index family, the " +
         "nightly maintenance decision a deployment schedules, " +
-        "hash-checked end to end"),
+        "hash-checked end to end",
+      rides = Seq(kmeansCentroids, probeAsg)),
     Q("q154_pq_recon_error", pqReconError, Some(pqReconErrorSql),
       "PQ index-health audit: per-cell quantization error (integer " +
         "mean + max squared-L2 to the assigned codewords) via the " +
@@ -3797,31 +3779,41 @@ object VectorOps {
         "beside q83's recall audit"),
     Q("q66_pq_codes", pqCodes, Some(pqCodesSql),
       "PQ index build: 8x4-bit product-quantization codes (64x vector " +
-        "compression), integer-exact codebook, hash-checked per vector"),
+        "compression), integer-exact codebook, hash-checked per vector",
+      pays = Seq(annIndex)),
     Q("q67_pq_ann", pqAnn(_, _), Some(pqAnnSql),
       "PQ ADC top-k: 128-entry integer lookup table, codes-only scan — " +
-        "even the distances are part of the hash check"),
+        "even the distances are part of the hash check",
+      rides = Seq(annIndex)),
     Q("q68_ivfpq_ann", ivfPqAnn(_, _), Some(ivfPqAnnSql),
       "IVF-PQ composition: grid probe-pruning x ADC code scan (the " +
-        "FAISS deployment shape), probe set and distances hash-checked"),
+        "FAISS deployment shape), probe set and distances hash-checked",
+      rides = Seq(annIndex)),
     Q("q70_doc_ann", docAnn(_, _), Some(docAnnSql),
       "text->vector->index->search closed loop: q69 hashed vectors " +
         "densified, grid+PQ indexed with the q66/q68 lifts, query doc " +
-        "ADC-searched — probe set and distances hash-checked"),
+        "ADC-searched — probe set and distances hash-checked",
+      pays = Seq(docVecs),
+      rides = Seq(PipelineOps.featureHashes)),
     Q("q158_multi_query_ann", multiQueryAnn(_, _), Some(multiQueryAnnSql),
       "multi-query ANN serving: a query TABLE vectorized, 2-probe " +
         "assigned, and ADC-scored columnar via the pq_adc_dist " +
         "codegen expression — zero driver-side per-query work, " +
-        "per-query top-5 window bounded by probe cells"),
+        "per-query top-5 window bounded by probe cells",
+      rides = Seq(PipelineOps.featureHashes, docAnnIndex, docVecs)),
     Q("q156_hybrid_rrf", hybridRrf, Some(hybridRrfSql),
       "hybrid retrieval: reciprocal-rank fusion (k=60, integer " +
         "micro-units) of the q89 lexical arm and a vector arm " +
         "answering the same terms via hashed-query ADC over the q70 " +
-        "doc vectors — fusion hash-proven consistent with both arms"),
+        "doc vectors — fusion hash-proven consistent with both arms",
+      pays = Seq(docAnnIndex),
+      rides = Seq(PipelineOps.featureHashes, docVecs)),
     Q("q76_ivfpq_rerank", ivfPqRerank(_, _), Some(ivfPqRerankSql),
       "two-stage retrieval: integer-exact ADC shortlist (q68 stage) + " +
-        "exact cosine rerank of only the shortlist's raw vectors"),
+        "exact cosine rerank of only the shortlist's raw vectors",
+      rides = Seq(annIndex)),
     Q("q83_ann_recall", annRecall, Some(annRecallSql),
       "recall@5 audit of the IVF-PQ index vs the exact ranking — " +
-        "both sides hash-checked, the report is a k-row broadcast join"))
+        "both sides hash-checked, the report is a k-row broadcast join",
+      rides = Seq(annIndex)))
 }

@@ -131,9 +131,4 @@ object Tables {
     val w = fanWidth(spark)
     if (estSplits * 2 <= w) df.repartition(w) else df
   }
-
-  /** Register every table as a temp view so `spark.sql` text queries work
-    * against the same relations the DataFrame API sees. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -1491,15 +1491,6 @@ object StreamingQueries {
   }
 
   // ------------------------------------------------------------- sinks
-  /** Memory sink (test/driver inspection). */
-  def toMemory(df: DataFrame, name: String, mode: String): StreamingQuery =
-    df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-
-  /** Console sink, reference style (`src/bike_consumer.py:141-146`). */
-  def toConsole(df: DataFrame, mode: String): StreamingQuery =
-    df.writeStream.outputMode(mode).format("console")
-      .option("truncate", "false").start()
-
   /** foreachBatch with per-batch top-k — the reference's plot callback
     * replaced by a structured sink (SURVEY §2.2). */
   def foreachBatchTopK(df: DataFrame, qLat: Double, qLon: Double, k: Int,

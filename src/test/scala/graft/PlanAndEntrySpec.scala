@@ -151,30 +151,44 @@ class PlanAndEntrySpec extends SparkSuite {
     // run-everything test doubles as the compiles-cleanly guard.
     val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    // drop memoized shared artifacts (pair table, cluster labels, ANN
-    // index): earlier tests materialize them under default fallback, and
-    // a cached artifact would let its build pipeline — the heaviest
-    // codegen in the repo, and the exact code whose silent fallback
-    // motivated this guard — skip compilation here entirely
-    graft.queries.DedupOps.invalidateSharedArtifacts()
-    graft.queries.VectorOps.invalidateSharedArtifacts()
-    // every memo family, not just the two historical ones — the r17
-    // serving-route artifacts (q205–q210) would otherwise serve this
-    // guard cached blocks and their pipelines would never compile
-    // under fallback=false (review finding, r17 optimization round)
-    graft.queries.TextOps.invalidateSharedArtifacts()
-    graft.queries.PipelineOps.invalidateSharedArtifacts()
-    graft.queries.KnnGraphOps.invalidateSharedArtifacts()
+    // drop every memoized shared artifact: earlier tests materialize
+    // them under default fallback, and a cached artifact would let its
+    // build pipeline — the heaviest codegen in the repo, and the exact
+    // code whose silent fallback motivated this guard — skip
+    // compilation here entirely
+    import graft.queries.{Artifact, Artifacts, Registry}
+    Artifacts.invalidateAll()
+    val builds0 = Artifacts.all.map(a => a -> a.builds).toMap
+    def reads = Artifacts.all.map(a => a -> a.reads).toMap
     try {
-      val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-        val n = fn(spark, sf0001).count()
-        if (n == 0) Some(name) else None
+      val empties = Seq.newBuilder[String]
+      val undeclared = Seq.newBuilder[String]
+      for (q <- Registry.all) {
+        val r0 = reads
+        if (q.run(spark, sf0001).count() == 0) empties += q.name
+        // an artifact a query reads (hit or build) must be declared,
+        // or Bench would not check that its payer runs first
+        undeclared ++= reads.collect {
+          case (a, r) if r > r0.getOrElse(a, 0L) &&
+              !q.pays.contains(a) && !q.rides.contains(a) =>
+            s"${q.name} reads ${a.name}"
+        }
       }
       // near-dup pair sets (and reports derived from them) may legitimately
       // be empty at tiny SF; everything else must produce rows
       val mayBeEmpty = Set("q38", "q41", "q42", "q44", "q54")
-      assert(empties.forall(n => mayBeEmpty.exists(n.startsWith)),
-        s"unexpected empty: $empties")
+      assert(empties.result().forall(n => mayBeEmpty.exists(n.startsWith)),
+        s"unexpected empty: ${empties.result()}")
+      assert(undeclared.result().isEmpty, undeclared.result().mkString("\n"))
+      // every declared artifact was built above, and nothing undeclared was
+      val declared = Registry.all.flatMap(q => q.pays ++ q.rides)
+        .collect { case a: Artifact[_] => a }.toSet
+      val built = Artifacts.all
+        .filter(a => a.builds > builds0.getOrElse(a, 0L)).toSet
+      assert((declared -- built).isEmpty,
+        s"declared but never built: ${(declared -- built).map(_.name)}")
+      assert((built -- declared).isEmpty,
+        s"built but declared by no query: ${(built -- declared).map(_.name)}")
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }
 }

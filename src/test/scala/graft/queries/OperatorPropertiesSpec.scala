@@ -308,17 +308,17 @@ class OperatorPropertiesSpec extends SparkSuite {
   }
 
   test("verifiedPairs memo: newSession clones share one materialization") {
-    DedupOps.invalidateSharedArtifacts()
+    Artifacts.invalidateAll()
     val first = DedupOps.verifiedPairs(spark, sf0001)
     // a session clone shares the SparkContext (and thus the cached
     // blocks) — it must get the SAME memoized frame, not re-mine
     val clone = spark.newSession()
     assert(DedupOps.verifiedPairs(clone, sf0001) eq first)
     assert(DedupOps.verifiedPairs(spark, sf0001) eq first)
-    DedupOps.invalidateSharedArtifacts()
+    Artifacts.invalidateAll()
     val fresh = DedupOps.verifiedPairs(spark, sf0001)
     assert(!(fresh eq first))
-    DedupOps.invalidateSharedArtifacts()
+    Artifacts.invalidateAll()
   }
 
   test("dedupCorpus keeps exactly one survivor per cluster, the longest doc") {

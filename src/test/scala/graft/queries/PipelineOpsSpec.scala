@@ -734,7 +734,7 @@ class PipelineOpsSpec extends SparkSuite {
     // one map-only replace-chain projection (applyMergesExpr at the
     // PUA base), and its corpus symbol mass equals the reference
     // implementation's final segmentation exactly
-    val wideMerges = PipelineOps.minedMerges(spark, sf0001, 5, 8, 0xE000)
+    val wideMerges = PipelineOps.minedMergesWide(spark, sf0001)
     assert(wideMerges.length == 40)
     val engTotal = graft.sources.Tables(spark, sf0001, "documents")
       .select(explode(regexp_extract_all($"text",
@@ -747,7 +747,7 @@ class PipelineOpsSpec extends SparkSuite {
       s"wide application: engine $engTotal vs reference $refTotal")
     // 40 merges compress strictly beyond the 5 narrow ones (empirical
     // on this corpus; per-doc monotonicity is not a theorem)
-    val narrowMerges = PipelineOps.minedMerges(spark, sf0001, 5)
+    val narrowMerges = PipelineOps.minedMerges(spark, sf0001)
     val narrowTotal = graft.sources.Tables(spark, sf0001, "documents")
       .select(explode(regexp_extract_all($"text",
         lit(PipelineOps.preTokenPattern), lit(0))).as("seg"))

@@ -1024,7 +1024,7 @@ class StreamingSpec extends SparkSuite {
     val batch = graft.queries.PipelineOps.tokenizeCorpus(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001, 5)
+    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001)
     val feed = Tables(spark, sf0001, "documents")
       .select($"doc_id", $"text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -1051,7 +1051,7 @@ class StreamingSpec extends SparkSuite {
     val batch = graft.queries.PipelineOps.tokenizerFertility(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
-    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001, 5)
+    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001)
     val feed = Tables(spark, sf0001, "documents")
       .select($"doc_id", $"text", $"source").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
@@ -1079,7 +1079,7 @@ class StreamingSpec extends SparkSuite {
     // silently drop such docs (ADVICE r10)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001, 5)
+    val merges = graft.queries.PipelineOps.minedMerges(spark, sf0001)
     val ms = MemoryStream[(Long, String, String)]
     val tok = StreamingQueries.tokenizeStream(
         ms.toDF().toDF("doc_id", "text", "source"), merges)
