@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.queries.{Artifacts, Registry, ServingIndexes}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Benchmark main (driver contract): one JSON line with per-query
@@ -16,32 +16,29 @@ import java.util.concurrent.atomic.AtomicLong
   * Diagnosability: rounds 2 and 3 saw a 5-8x wall-clock inflation on
   * q44/q45 in the DRIVER's run only — never reproducible locally or by
   * the judge on the same box. To make the next occurrence attributable
-  * post-hoc, Bench (a) registers a task-metrics listener and emits a
-  * per-query executor-CPU / executor-run / GC breakdown (inflated wall
-  * with flat CPU = external contention; inflated GC = memory pressure;
-  * inflated CPU = real recomputation, e.g. cache eviction), and (b)
-  * writes a compressed Spark event log under ./spark-events for full
-  * task-level forensics.
-  *
-  * Measurement-conditions caveat (ADVICE r4): event-log serialization
-  * + compression runs DURING every timed query window, so instrumented
-  * numbers carry a small overhead that pre-round-4 numbers don't.
-  * `GRAFT_BENCH_EVENTLOG=0` disables the event log for a clean-timing
-  * run (the in-process task-metrics listener stays on — counter
-  * updates on task end are noise-level). Default stays ON: forensic
-  * attributability of a driver-run anomaly is worth more than the
-  * overhead, and round-over-round comparisons stay like-for-like from
-  * r4 onward. */
+  * from the run's own output, Bench registers a listener and emits a
+  * per-query executor-CPU / executor-run / GC / spill / jobs / stages
+  * / shuffle-bytes breakdown (inflated wall with flat CPU = external
+  * contention; inflated GC = memory pressure; inflated CPU, jobs or
+  * shuffle bytes = real recomputation, e.g. cache eviction). */
 object Bench {
-  /** Accumulates executor task metrics across the whole app; Bench
-    * snapshots the counters around each query (after draining the
-    * async listener bus) to attribute deltas per query. */
+  /** Accumulates executor task metrics and job/stage counts across the
+    * whole app; Bench snapshots the counters around each query (after
+    * draining the async listener bus) to attribute deltas per query. */
   final class TaskMetricsListener extends SparkListener {
     val cpuNs = new AtomicLong // executorCpuTime is nanoseconds
     val runMs = new AtomicLong // executorRunTime is milliseconds
     val gcMs = new AtomicLong // jvmGCTime is milliseconds
     val spillB = new AtomicLong // memory+disk bytes spilled
     val nTasks = new AtomicLong // TaskEnd events seen
+    val nJobs = new AtomicLong
+    val nStages = new AtomicLong // completed stages (skipped ones never run)
+    val shuffleReadB = new AtomicLong
+    val shuffleWriteB = new AtomicLong
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      nJobs.incrementAndGet()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+      nStages.incrementAndGet()
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       nTasks.incrementAndGet()
       val m = te.taskMetrics
@@ -50,57 +47,26 @@ object Bench {
         runMs.addAndGet(m.executorRunTime)
         gcMs.addAndGet(m.jvmGCTime)
         spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+        shuffleReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shuffleWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
     }
-    def snapshot(): (Long, Long, Long, Long) =
-      (cpuNs.get, runMs.get, gcMs.get, spillB.get)
+    def snapshot(): Seq[Long] =
+      Seq(cpuNs, runMs, gcMs, spillB, nJobs, nStages, shuffleReadB,
+        shuffleWriteB).map(_.get)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val eventLogDir = new java.io.File("spark-events")
-    eventLogDir.mkdirs()
-    // keep the forensic window bounded: one log lands per run, nothing
-    // else cleans them — retain the 9 most recent, delete the rest
-    // (recursively: rolling logs are directories of part files)
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete()
-    }
-    Option(eventLogDir.listFiles()).getOrElse(Array.empty)
-      .sortBy(-_.lastModified()).drop(9).foreach(rmTree)
-    val eventLogOn = sys.env.getOrElse("GRAFT_BENCH_EVENTLOG", "1") != "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's coalescing floor, parameterised for experimentation. The
-      // round-17 A/B measured BOTH directions before keeping the 1m
-      // default: 64k parallelized the CPU-dense verification stages
-      // (q38 6.75 → 4.55 s) but multiplied per-stage task overhead on
-      // the iterative tiny-stage queries (q198 6.8 → 12.4 s, q205
-      // 2.1 → 8.2 s, q207 4.4 → 11.1 s) — a net suite LOSS. The
-      // surgical repartition alternatives for q38 were measured and
-      // ALSO rejected (memory-bound; OPTIMIZATION_r17.md "Measured
-      // and rejected"), so the default simply stays Spark's.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PARTITION_SIZE", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.eventLog.enabled", eventLogOn.toString)
-      .config("spark.eventLog.compress", "true")
-      .config("spark.eventLog.dir", eventLogDir.toURI.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.envCpus
+    val spark = LocalSession("graft-bench", cpus)
     val metrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    def drained(): (Long, Long, Long, Long) = {
+    def drained(): Seq[Long] = {
       // waitUntilEmpty throws TimeoutException after ~10 s; a lagging
-      // listener queue (compressed event-log writes on a contended box
-      // — the very scenario this instrumentation diagnoses) must cost
-      // attribution precision for one query, never the bench run
+      // listener queue on a contended box — the very scenario this
+      // instrumentation diagnoses — must cost attribution precision
+      // for one query, never the bench run
       try org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
       catch { case e: Exception =>
         System.err.println(s"[bench] listener drain timed out: ${e.getMessage}") }
@@ -139,7 +105,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_count bounds the ANSI sum (≤ 64·2e8 ≪ Long.Max) while the
       // per-row xxhash64 keeps the job CPU-bound
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(cast(bit_count(xxhash64(id)) as bigint)) as s")
         .collect()
       (System.nanoTime() - t0) / 1e9
@@ -148,16 +114,11 @@ object Bench {
     val canaryStart = canary()
 
     val diag = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val (suiteCpu0, suiteRun0, _, _) = drained()
+    val Seq(suiteCpu0, suiteRun0, _*) = drained()
     val suiteTasks0 = metrics.nTasks.get
     val results = selected.map { q =>
       val name = q.name
-      val (cpu0, run0, gc0, sp0) = drained()
-      // job group = query name: stamps every job/stage this query runs
-      // into the event log, so EventLogDigest can attribute stages to
-      // queries in a DRIVER-run log post-hoc (the r2-r4 q44/q45
-      // inflation hunts had to infer attribution from timing windows)
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
+      val before = drained()
       val t0 = System.nanoTime()
       val r = try {
         val df = q.run(spark, sfDir)
@@ -174,15 +135,15 @@ object Bench {
         System.err.println(s"[bench] $name failed: " + e.getMessage)
         name -> -1.0
       }
-      spark.sparkContext.clearJobGroup()
-      val (cpu1, run1, gc1, sp1) = drained()
+      val Seq(cpu, run, gc, sp, jobs, stages, shR, shW) =
+        drained().zip(before).map { case (a, b) => a - b }
       // ms-rounded via Double.toString: locale-independent, unlike
       // f"%.3f" (a comma-decimal default locale would corrupt the JSON)
       def ms3(x: Double): String = (math.rint(x * 1000) / 1000).toString
-      diag(name) = s"""{"wall":${ms3(r._2)},"cpu":${ms3((cpu1 - cpu0) / 1e9)},"run":${ms3((run1 - run0) / 1e3)},"gc":${ms3((gc1 - gc0) / 1e3)},"spillMB":${ms3((sp1 - sp0) / 1048576.0)}}"""
+      diag(name) = s"""{"wall":${ms3(r._2)},"cpu":${ms3(cpu / 1e9)},"run":${ms3(run / 1e3)},"gc":${ms3(gc / 1e3)},"spillMB":${ms3(sp / 1048576.0)},"jobs":$jobs,"stages":$stages,"shuffleReadBytes":$shR,"shuffleWriteBytes":$shW}"""
       r
     }
-    val (suiteCpu1, suiteRun1, _, _) = drained()
+    val Seq(suiteCpu1, suiteRun1, _*) = drained()
     val suiteTasks1 = metrics.nTasks.get
     val canaryEnd = canary()
     // suite-level contention marker: Σ executorRunTime / Σ executorCpuTime
@@ -229,7 +190,7 @@ object Bench {
     // cpu_total_s/n_tasks ride the short line too: it is the line that
     // survives stdout truncation and becomes the round artifact, and
     // the whole point of the two fields is that the artifact alone can
-    // adjudicate a box anomaly without event-log forensics
+    // adjudicate a box anomaly
     val shortLine =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$nFailed,"contention":$contention,"cpu_total_s":${ms2(suiteCpuSec)},"n_tasks":$suiteTasks,"sf":"$sfDir"}"""
     // executor-CPU/run/GC seconds per query (cpu is summed across all

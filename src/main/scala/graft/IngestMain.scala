@@ -231,16 +231,7 @@ object IngestMain {
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_ingest_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-ingest")
     val t0 = System.nanoTime()
     val counters = runIngest(spark, sfDir, outDir)
     val wall = (System.nanoTime() - t0) / 1e9

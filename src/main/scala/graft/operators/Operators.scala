@@ -58,16 +58,40 @@ object Operators {
       .drop("_gap", "_new")
   }
 
+  /** Per-group top-k: rank each `by` group's rows by `order :+ tieBreak`
+    * into a long `rankCol` (1, 2, ...) and keep rank ≤ k. `tieBreak` is
+    * required and must make the ordering unique within a group — the
+    * survivors at the k boundary are then the same on every engine and
+    * at every partitioning. Spark plans the rank filter as
+    * WindowGroupLimit (Partial before the exchange, Final after it),
+    * so each group ships at most k rows per map task. NaN-bearing
+    * sort keys are the caller's to guard (nanvl in `order`). */
+  def topKPerGroup(df: DataFrame, by: Seq[Column], order: Seq[Column],
+      tieBreak: Column, k: Int, rankCol: String = "rank"): DataFrame = {
+    val w = Window.partitionBy(by: _*).orderBy(order :+ tieBreak: _*)
+    df.withColumn(rankCol, row_number().over(w).cast("long"))
+      .filter(col(rankCol) <= k)
+  }
+
+  /** Global top-k: `orderBy(order :+ tieBreak).limit(k)` first — one
+    * TakeOrderedAndProject, each task keeps its own k best and only
+    * those reach the driver — then a long `rankCol` over the ≤ k
+    * survivors. The rank window's AllTuples requirement is met by the
+    * limit's single-partition output, so no exchange is added. Same
+    * `tieBreak` contract as [[topKPerGroup]]. */
+  def topK(df: DataFrame, order: Seq[Column], tieBreak: Column, k: Int,
+      rankCol: String = "rank"): DataFrame = {
+    val o = order :+ tieBreak
+    df.orderBy(o: _*).limit(k)
+      .withColumn(rankCol, row_number().over(Window.orderBy(o: _*)).cast("long"))
+  }
+
   /** Deterministic keep-first dedup: rank-1 per key by `order` — unlike
     * dropDuplicates, which survivor wins is well-defined
     * (streaming twin: dropDuplicatesWithinWatermark). */
   def dedupKeepFirst(df: DataFrame, keys: Seq[String],
-      order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-  }
+      order: Seq[Column], tieBreak: Column): DataFrame =
+    topKPerGroup(df, keys.map(col), order, tieBreak, 1, "_rn").drop("_rn")
 
   /** Skew-mitigating inner equi-join: salt the skewed big side into
     * `saltFactor` sub-keys and replicate the small side across salts.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorExpressions.simhash64
+import graft.operators.Operators
 import graft.sources.Tables
 
 /** Deduplication suite over `documents` (north star): exact, n-gram
@@ -30,11 +31,10 @@ object DedupOps {
     * per fingerprint (deterministic survivor, rank-1 idiom). */
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"fingerprint").orderBy($"doc_id".asc)
-    Tables(spark, dir, "documents")
-      .withColumn("fingerprint", fingerprintExpr($"text"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    Operators.topKPerGroup(
+        Tables(spark, dir, "documents")
+          .withColumn("fingerprint", fingerprintExpr($"text")),
+        Seq($"fingerprint"), Nil, $"doc_id".asc, 1)
       .select($"doc_id", $"fingerprint")
   }
 
@@ -536,17 +536,15 @@ object DedupOps {
   def minhashCalibrationSampled(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"source")
-      .orderBy(md5(concat(lit("calcap:"), $"doc_id".cast("string"))).asc,
-        $"doc_id".asc)
     minhashCalibrationOf(
-      Tables(spark, dir, "documents")
-        .select($"doc_id", $"source", $"text")
-        .filter(substring(md5(concat(lit("calsample:"), $"source")), 1, 1)
-          < CalSampleCut)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= CalBlockCap)
+      Operators.topKPerGroup(
+          Tables(spark, dir, "documents")
+            .select($"doc_id", $"source", $"text")
+            .filter(substring(md5(concat(lit("calsample:"), $"source")), 1, 1)
+              < CalSampleCut),
+          Seq($"source"),
+          Seq(md5(concat(lit("calcap:"), $"doc_id".cast("string"))).asc),
+          $"doc_id".asc, CalBlockCap)
         .select($"doc_id", $"source", $"text"))
   }
 
@@ -782,10 +780,8 @@ object DedupOps {
         .as("e"))
       .select($"e.doc_id".as("doc_id"), $"e.neighbor_id".as("neighbor_id"),
         $"e.jaccard".as("jaccard"))
-    val w = Window.partitionBy($"doc_id")
-      .orderBy($"jaccard".desc, $"neighbor_id".asc)
-    sym.withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= k)
+    Operators.topKPerGroup(sym, Seq($"doc_id"), Seq($"jaccard".desc),
+      $"neighbor_id".asc, k, "rk")
   }
 
   private val similarNeighborsSql =

@@ -127,7 +127,7 @@ object EventOps {
     graft.operators.Operators.dedupKeepFirst(
       Tables(spark, dir, "events"),
       keys = Seq("user_id", "event_type"),
-      order = Seq($"ts".asc, $"event_id".asc))
+      order = Seq($"ts".asc), tieBreak = $"event_id".asc)
       .select($"event_id", $"user_id", $"event_type")
   }
 

@@ -146,13 +146,10 @@ object KnnGraphOps {
     * ≤ 2k(2k-1)+k candidate rows per node entering it), deterministic
     * tie-break (sim desc, b_id asc) — the total order both engines
     * agree on. */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val w = Window.partitionBy($"a_id").orderBy($"sim".desc, $"b_id".asc)
-    scored.withColumn("rn", row_number().over(w)).filter($"rn" <= k)
-      .select($"a_id", $"b_id", $"sim")
-  }
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    Operators.topKPerGroup(scored, Seq(col("a_id")), Seq(col("sim").desc),
+        col("b_id").asc, k)
+      .select(col("a_id"), col("b_id"), col("sim"))
 
   /** One NN-Descent round. The reverse cap is load-bearing at scale:
     * out-degree is k by construction but in-degree is unbounded (a
@@ -164,9 +161,9 @@ object KnnGraphOps {
     val spark = emb.sparkSession
     import spark.implicits._
     val out = g.select($"a_id".as("u"), $"b_id".as("v"))
-    val wRev = Window.partitionBy($"u").orderBy($"sim".desc, $"v".asc)
-    val rev = g.select($"b_id".as("u"), $"a_id".as("v"), $"sim")
-      .withColumn("rn", row_number().over(wRev)).filter($"rn" <= k)
+    val rev = Operators.topKPerGroup(
+        g.select($"b_id".as("u"), $"a_id".as("v"), $"sim"),
+        Seq($"u"), Seq($"sim".desc), $"v".asc, k)
       .select($"u", $"v")
     val und = out.union(rev).distinct()
     // both ordered directions come from ONE join pass (x.v =!= y.v):
@@ -348,10 +345,8 @@ object KnnGraphOps {
     * Every vector gets a row; singletons label themselves. */
   def mutualKnnClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"a_id").orderBy($"sim".desc, $"b_id".asc)
-    val g = knnGraphTable(spark, dir)
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= MutualRank)
+    val g = Operators.topKPerGroup(knnGraphTable(spark, dir), Seq($"a_id"),
+      Seq($"sim".desc), $"b_id".asc, MutualRank, "rnk")
     val mutual = g.as("f")
       .join(g.as("r"),
         col("f.a_id") === col("r.b_id") && col("f.b_id") === col("r.a_id")
@@ -558,11 +553,7 @@ object KnnGraphOps {
       .select($"b_id".as("vec_id"),
         nanvl(cosine($"embedding", $"q_emb"),
           lit(Double.NegativeInfinity)).as("sim"))
-    // the rankedTopK device: TakeOrderedAndProject keeps the plan
-    // scale-safe; the rank window runs over <= 5 rows
-    val w = Window.orderBy($"sim".desc, $"vec_id".asc)
-    scored.orderBy($"sim".desc, $"vec_id".asc).limit(5)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(scored, Seq($"sim".desc), $"vec_id".asc, 5)
       .select($"rank", $"vec_id")
   }
 
@@ -877,10 +868,9 @@ object KnnGraphOps {
       .select($"d_id", $"c_id",
         nanvl(cosine($"d_emb", $"c_emb"),
           lit(Double.NegativeInfinity)).as("sim"))
-    val w = Window.partitionBy($"d_id").orderBy($"sim".desc, $"c_id".asc)
-    scored.withColumn("rn", row_number().over(w)).filter($"rn" <= GraphK)
-      .select($"d_id".as("vec_id"), $"rn".cast("long").as("rank"),
-        $"c_id".as("nb_id"), $"sim")
+    Operators.topKPerGroup(scored, Seq($"d_id"), Seq($"sim".desc),
+        $"c_id".asc, GraphK)
+      .select($"d_id".as("vec_id"), $"rank", $"c_id".as("nb_id"), $"sim")
   }
 
   /** q205 — graph ANN for an OUT-OF-CORPUS query vector (VERDICT r14
@@ -948,11 +938,7 @@ object KnnGraphOps {
       .select($"vec_id",
         nanvl(cosine($"embedding", $"q_emb"),
           lit(Double.NegativeInfinity)).as("sim"))
-    // the rankedTopK device: TakeOrderedAndProject; the rank window
-    // runs over <= 5 rows post-limit
-    val w = Window.orderBy($"sim".desc, $"vec_id".asc)
-    val exact = scored.orderBy($"sim".desc, $"vec_id".asc).limit(5)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    val exact = Operators.topK(scored, Seq($"sim".desc), $"vec_id".asc, 5)
       .select($"rank", $"vec_id")
     val routed = graphSearch(spark, dir)
       .select($"vec_id", lit(true).as("in_route"))
@@ -1128,10 +1114,9 @@ object KnnGraphOps {
       .select($"query_id", $"nb_id",
         nanvl(cosine($"q_emb", $"c_emb"),
           lit(Double.NegativeInfinity)).as("sim"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"sim".desc, $"nb_id".asc)
-    pairs.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5).select($"query_id", $"nb_id")
+    Operators.topKPerGroup(pairs, Seq($"query_id"), Seq($"sim".desc),
+        $"nb_id".asc, 5)
+      .select($"query_id", $"nb_id")
   }
 
   /** The one-row audit rollup over (exact arm, served route). */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.Operators
 import graft.sources.Tables
 
 /** Corpus-preparation operators a training-data pipeline runs between
@@ -143,9 +144,7 @@ object PipelineOps {
         "transform(sequence(1, length(t) - 1), i -> substring(t, i, 2))"))
         .as("pair"))
       .groupBy($"pair").agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy($"cnt".desc, $"pair".asc)
-    counted.orderBy($"cnt".desc, $"pair".asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(counted, Seq($"cnt".desc), $"pair".asc, k)
       .select($"rank", $"pair", $"cnt")
   }
 
@@ -380,9 +379,8 @@ object PipelineOps {
       .select(decodeSymExpr(substring($"pr", 1, 1), merges).as("left_sym"),
         decodeSymExpr(substring($"pr", 2, 1), merges).as("right_sym"))
       .groupBy($"left_sym", $"right_sym").agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy($"cnt".desc, $"left_sym".asc, $"right_sym".asc)
-    counted.orderBy($"cnt".desc, $"left_sym".asc, $"right_sym".asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(counted, Seq($"cnt".desc, $"left_sym".asc),
+        $"right_sym".asc, k)
       .select($"rank", $"left_sym", $"right_sym", $"cnt")
   }
 

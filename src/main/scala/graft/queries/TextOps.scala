@@ -254,12 +254,9 @@ object TextOps {
       .groupBy($"doc_id", $"token")
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy($"token").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id")
-      .orderBy($"tf".desc, $"df".asc, $"token".asc)
-    tf.join(dfreq, "token")
-      .withColumn("term_rank", row_number().over(w).cast("long"))
-      .filter($"term_rank" <= 3)
+    graft.operators.Operators.topKPerGroup(tf.join(dfreq, "token"),
+        Seq($"doc_id"), Seq($"tf".desc, $"df".asc), $"token".asc, 3,
+        "term_rank")
       .select($"doc_id", $"term_rank", $"token", $"tf", $"df")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorExpressions.cosine
+import graft.operators.Operators
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (north star). All
@@ -17,14 +18,11 @@ import graft.sources.Tables
   */
 object VectorOps {
 
-  /** Scale-safe exact top-k: `orderBy(...).limit(k)` plans as
-    * TakeOrderedAndProject — each partition keeps only its local top-k
-    * and the driver merges numPartitions×k rows — versus a global
-    * `Window.orderBy`, which shuffles the ENTIRE candidate set to one
-    * partition to rank it (the 100× scale-killer). Ranks are assigned
-    * AFTER the limit: the window's AllTuples requirement is already met
-    * by TakeOrderedAndProject's SinglePartition output, so no exchange
-    * is added and the window sees ≤ k rows. */
+  /** Scale-safe exact cosine top-k over (vec_id, sim):
+    * [[Operators.topK]] plans as TakeOrderedAndProject — each partition
+    * keeps only its local top-k — versus a global `Window.orderBy`,
+    * which shuffles the ENTIRE candidate set to one partition to rank
+    * it (the 100× scale-killer). */
   private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
@@ -36,11 +34,7 @@ object VectorOps {
     // be recomputed per row — doubling the flops of the scan-dominant
     // stage. nanvl over the already-materialized column is free.
     val key = nanvl($"sim", lit(Double.NegativeInfinity))
-    val w = Window.orderBy(key.desc, $"vec_id".asc)
-    scored
-      .orderBy(key.desc, $"vec_id".asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(scored, Seq(key.desc), $"vec_id".asc, k)
       .select($"rank", $"vec_id")
   }
 
@@ -605,9 +599,7 @@ object VectorOps {
       .crossJoin(broadcast(q))
       .withColumn("idist", graft.functions.VectorExpressions
         .longVecSqDist($"codes", $"q_codes"))
-      .orderBy($"idist".asc, $"vec_id".asc).limit(5)
-      .withColumn("rank", row_number().over(
-        Window.orderBy($"idist".asc, $"vec_id".asc)).cast("long"))
+      .transform(Operators.topK(_, Seq($"idist".asc), $"vec_id".asc, 5))
       .select($"rank", $"vec_id", $"idist")
   }
 
@@ -638,9 +630,7 @@ object VectorOps {
       .crossJoin(broadcast(q))
       .withColumn("idist", graft.functions.VectorExpressions
         .longVecSqDist($"codes", $"q_codes"))
-      .orderBy($"idist".asc, $"vec_id".asc).limit(5)
-      .withColumn("rank", row_number().over(
-        Window.orderBy($"idist".asc, $"vec_id".asc)).cast("long"))
+      .transform(Operators.topK(_, Seq($"idist".asc), $"vec_id".asc, 5))
       .select($"rank", $"vec_id", $"idist")
   }
 
@@ -1710,9 +1700,7 @@ object VectorOps {
   private def rankedAdcTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val w = Window.orderBy($"adc_dist".asc, $"vec_id".asc)
-    scored.orderBy($"adc_dist".asc, $"vec_id".asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(scored, Seq($"adc_dist".asc), $"vec_id".asc, k)
       .select($"rank", $"vec_id", $"adc_dist")
   }
 
@@ -1801,9 +1789,7 @@ object VectorOps {
     val pairs = a.join(b, "cell").filter($"a_id" < $"b_id")
       .withColumn("sdc_dist", sdcCol(sdcLut(), $"a_code", $"b_code"))
       .select($"a_id", $"b_id", $"sdc_dist")
-    val w = Window.orderBy($"sdc_dist".asc, $"a_id".asc, $"b_id".asc)
-    pairs.orderBy($"sdc_dist".asc, $"a_id".asc, $"b_id".asc).limit(50)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    Operators.topK(pairs, Seq($"sdc_dist".asc, $"a_id".asc), $"b_id".asc, 50)
       .select($"rank", $"a_id", $"b_id", $"sdc_dist")
   }
 
@@ -2914,13 +2900,11 @@ object VectorOps {
         explode(array($"c1", $"c2")).as("cell"))
     val index = docAnnIndexTable(spark, dir)
       .select($"vec_id".as("doc_id"), $"cell", $"code")
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"adc_dist".asc, $"doc_id".asc)
-    queries.join(index, "cell")
-      .withColumn("adc_dist",
-        pqAdcDist($"q_emb", $"code", pqCodebook(), QuantScale))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
+    Operators.topKPerGroup(
+        queries.join(index, "cell")
+          .withColumn("adc_dist",
+            pqAdcDist($"q_emb", $"code", pqCodebook(), QuantScale)),
+        Seq($"query_id"), Seq($"adc_dist".asc), $"doc_id".asc, k)
       .select($"query_id", $"rank", $"doc_id", $"adc_dist")
   }
 
@@ -3078,16 +3062,15 @@ object VectorOps {
       explode(expr("sequence(0, fan - 1)")).as("sa"), $"own".as("sb"),
       $"vec_id".as("b_id"), $"embedding".as("b_emb"),
       $"nrm".as("b_nrm"), $"label".as("b_label"))
-    val w = Window.partitionBy($"a_id").orderBy($"sim".desc, $"b_id".asc)
-    a.join(b, Seq("cell", "sa", "sb"))
+    val cands = a.join(b, Seq("cell", "sa", "sb"))
       .filter($"a_label" =!= $"b_label")
       // same double-op order as cosine(): dot / (|a|·|b|) via the
       // ANSI-safe normDiv; NaN (zero norm) demotes below every real
       // so it can never rank
       .withColumn("sim", nanvl(normDiv(fvecDot($"a_emb", $"b_emb"),
         $"a_nrm" * $"b_nrm"), lit(Double.NegativeInfinity)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= HardNegK)
+    Operators.topKPerGroup(cands, Seq($"a_id"), Seq($"sim".desc),
+        $"b_id".asc, HardNegK)
       .select($"a_id".as("vec_id"), $"rank", $"b_id".as("neg_id"),
         $"b_label".cast("long").as("neg_label"))
   }

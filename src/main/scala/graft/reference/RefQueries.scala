@@ -2,18 +2,23 @@ package graft.reference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.ArrayType
+import graft.operators.Operators
 import graft.queries.Q
+import graft.sources.TopicSource
+import graft.streaming.StreamingQueries
 import Fixtures._
 
 /** The reference's four headline queries (SURVEY.md §0), re-expressed
   * Spark-first over embedded topic-shaped fixtures. Input always goes
-  * through the REAL parse path — JSON strings lifted with from_json
-  * against the explicit topic schema, exactly like a Kafka `value`
-  * column — and the oracle SQL is GENERATED from the same fixture
-  * constants as DuckDB VALUES, so the reference semantics themselves
-  * are hash-checked, not just eyeballed.
+  * through the REAL parse path — JSON strings lifted by
+  * [[TopicSource.lift]] against the explicit topic schema, exactly like
+  * a Kafka `value` column — and the oracle SQL is GENERATED from the
+  * same fixture constants as DuckDB VALUES, so the reference semantics
+  * themselves are hash-checked, not just eyeballed. Q3 and Q4 run the
+  * streaming cores ([[StreamingQueries.busPositions]],
+  * [[StreamingQueries.bikeShelterAgg]] + [[StreamingQueries.nearestK]])
+  * over the bounded fixture frame — on a batch frame the analyzer drops
+  * `withWatermark` — so the oracle checks the bodies the streams run.
   *
   * These bodies ignore the sfDir argument by design (their data model
   * is the transit topics, not the TPC-H tables); the scale-bearing
@@ -21,12 +26,11 @@ import Fixtures._
   */
 object RefQueries {
 
-  private def jsonDf(spark: SparkSession, rows: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def lifted(spark: SparkSession, rows: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      asArray: Boolean = false): DataFrame = {
     import spark.implicits._
-    rows.toDF("value")
-      .select(from_json($"value", schema).as("data"))
-      .select($"data.*")
+    TopicSource.lift(rows.toDF("value"), schema, asArray = asArray)
   }
 
   // ---------------------------------------------------------------- Q1
@@ -37,13 +41,13 @@ object RefQueries {
     * timestamp there — we implement the intent, SURVEY §7.4.2). */
   def planeBusMinWait(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val plane = jsonDf(spark, planeJson, Schemas.planeArrival)
+    val plane = lifted(spark, planeJson, Schemas.planeArrival)
       .withColumn("arrival_s", $"lastSeen".cast("long"))
       .filter($"arrival_s".between(q1Begin, q1End))
       .withColumn("arrival_time", from_unixtime($"arrival_s").cast("timestamp"))
       .select($"icao24", $"callsign", $"arrival_s", $"arrival_time")
 
-    val bus = jsonDf(spark, busScheduleJson, Schemas.busAirport)
+    val bus = lifted(spark, busScheduleJson, Schemas.busAirport)
       .withColumn("passage", explode($"passages"))
       .withColumn("hh", regexp_replace($"heure", "h", "").cast("int") % 24)
       .withColumn("mm", TransitFunctions.passageMinutes($"passage"))
@@ -54,13 +58,11 @@ object RefQueries {
       .withColumn("bus_time_s", unix_timestamp($"bus_time"))
       .select($"bus", $"bus_time", $"bus_time_s")
 
-    val w = Window.partitionBy($"icao24", $"arrival_s")
-      .orderBy($"wait_minutes".asc, $"bus".asc, $"bus_time_s".asc)
-    plane.join(bus, $"bus_time" > $"arrival_time")
+    val waits = plane.join(bus, $"bus_time" > $"arrival_time")
       .withColumn("wait_minutes",
         floor(($"bus_time_s" - $"arrival_s") / 60).cast("long"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    Operators.topKPerGroup(waits, Seq($"icao24", $"arrival_s"),
+        Seq($"wait_minutes".asc, $"bus".asc), $"bus_time_s".asc, 1)
       .select($"icao24", $"callsign", $"arrival_s", $"bus", $"bus_time_s",
         $"wait_minutes")
   }
@@ -95,7 +97,7 @@ object RefQueries {
     * ScalaTest golden asserts it). */
   def busAffluence(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    jsonDf(spark, q2Json, Schemas.busAffluence)
+    lifted(spark, q2Json, Schemas.busAffluence)
       .withColumn("hour", TransitFunctions.normalizeHour($"heure"))
       .groupBy($"hour")
       .agg(count(lit(1)).as("n_buses"))
@@ -110,28 +112,17 @@ object RefQueries {
   // ---------------------------------------------------------------- Q3
   /** Q3 — live bus positions along an ordered route
     * (`src/naolib_consumer.py:81-117`): per (1-min window, direction)
-    * keep the MIN wait per stop (the reference's collect_list order was
+    * keep the MIN wait per stop (the reference's list order was
     * nondeterministic — SURVEY §7.4.1 fixes the semantics), then infer:
     * wait 0 ⇒ bus AT the stop; decreasing waits between adjacent route
     * stops ⇒ bus BETWEEN them. Inference is pure columnar (map lookup
-    * + transform over route indices), no UDF. */
-  def busPositions(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fwd = route
-    val rev = route.reverse
-    jsonDf(spark, busReadingsJson, Schemas.busPosition)
-      .filter($"tempsReel" === "true")
-      .withColumn("minutes", TransitFunctions.minutesFromTemps($"temps"))
-      .withColumn("created_ts", to_timestamp($"created_at"))
-      .groupBy(window($"created_ts", "1 minute").as("w"), $"sens")
-      .agg(collect_list(struct($"stop", $"minutes")).as("rd"))
-      .withColumn("r", when($"sens" === 1, typedlit(fwd)).otherwise(typedlit(rev)))
-      .withColumn("waits", TransitFunctions.waitsExpr)
-      .withColumn("pos", TransitFunctions.positionsExpr)
-      .select($"w", $"sens", explode($"pos").as("p"))
-      .select(date_format($"w.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        $"sens", $"p.location".as("location"), $"p.at_stop".as("at_stop"))
-  }
+    * + transform over route indices), no UDF. The stream core's window
+    * start is printed as a second-resolution string. */
+  def busPositions(spark: SparkSession, dir: String): DataFrame =
+    StreamingQueries.busPositions(
+        lifted(spark, busReadingsJson, Schemas.busPosition), route)
+      .withColumn("window_start",
+        date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss"))
 
   private def busPositionsSql: String =
     s"""WITH agg AS (
@@ -169,40 +160,20 @@ object RefQueries {
     * ASCII occupancy bar (`src/bike_consumer.py:22-151`). The geo
     * top-k the reference pushed to the REST API (`src/bike_producer
     * .py:23-40`) is native here: haversine column + window rank ≤ 5.
-    * Parses through the ArrayType schema to preserve the
-    * object-as-array tolerance (SURVEY §1.2). */
+    * Lifts with `asArray = true` to preserve the object-as-array
+    * tolerance (SURVEY §1.2). */
   def bikeShelters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val parsed = bikeJson.toDF("value")
-      .select(from_json($"value", ArrayType(Schemas.bikeStation)).as("data"))
-      .select(explode($"data").as("s"))
-      .select($"s.*")
-      .withColumn("bikes", $"available_bikes".cast("int"))
-      .withColumn("free_stands", $"available_bike_stands".cast("int"))
-      .withColumn("last_ts",
-        to_timestamp($"last_update", "yyyy-MM-dd'T'HH:mm:ssXXX"))
-
-    val agg = parsed
-      .groupBy($"name", $"address", window($"last_ts", "1 minute").as("w"))
-      .agg(avg($"bikes").as("ab"), avg($"free_stands").as("af"),
-        max($"bike_stands").as("st"),
-        min($"position.lat").as("lat"), min($"position.lon").as("lon"))
-      .withColumn("window_start_s", unix_timestamp($"w.start"))
+    val agg = StreamingQueries.bikeShelterAgg(
+      lifted(spark, bikeJson, Schemas.bikeStation, asArray = true))
+    StreamingQueries.nearestK(agg, q4Lat, q4Lon, 5)
       // the reference prints BOTH window bounds (bike_consumer.py:134-135)
-      .withColumn("window_end_s", unix_timestamp($"w.end"))
-      .withColumn("dist", TransitFunctions.haversineMeters(
-        $"lat", $"lon", lit(q4Lat), lit(q4Lon)))
-
-    val w = Window.partitionBy($"window_start_s")
-      .orderBy($"dist".asc, $"name".asc)
-    agg
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"name", $"address", $"window_start_s", $"window_end_s",
+      .select($"name", $"address",
+        unix_timestamp($"window_start").as("window_start_s"),
+        unix_timestamp($"window_end").as("window_end_s"),
         floor($"ab" + 0.5).cast("int").as("bikes_r"),
         floor($"af" + 0.5).cast("int").as("free_r"),
-        TransitFunctions.occupancyBar($"ab", $"st", $"af").as("bar"),
-        $"rank")
+        $"bar", $"rank")
   }
 
   private def bikeSheltersSql: String =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.reference.TransitFunctions
 
@@ -48,12 +47,10 @@ object StreamingQueries {
   def nearestK(batch: DataFrame, qLat: Double, qLon: Double, k: Int): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val w = Window.partitionBy($"window_start").orderBy($"dist".asc, $"name".asc)
-    batch
-      .withColumn("dist", TransitFunctions.haversineMeters(
-        $"lat", $"lon", lit(qLat), lit(qLon)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
+    graft.operators.Operators.topKPerGroup(
+      batch.withColumn("dist", TransitFunctions.haversineMeters(
+        $"lat", $"lon", lit(qLat), lit(qLon))),
+      Seq($"window_start"), Seq($"dist".asc), $"name".asc, k)
   }
 
   /** Q3 streaming core: 1-minute watermark + tumbling window, ONE

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection main: prints the formatted plan of each named query
   * (or all) over a given SF dir. Used for the per-round "is this the
@@ -8,13 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-explain", cpus = 4,
+      logLevel = "ERROR")
     val wanted = if (args.isEmpty) graft.SparkEntry.queries.keys.toSeq.sorted
                  else args.toSeq
     for (name <- wanted; fn <- graft.SparkEntry.queries.get(name)) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection main for operator INTERNALS whose registry plans are
   * checkpoint-opaque: q198's per-round descent plan materializes behind
@@ -12,13 +11,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainInternals {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-explain-internals", cpus = 4,
+      logLevel = "ERROR")
     println("\n========== descent_round ==========")
     graft.queries.KnnGraphOps.explainDescentRound(spark, sfDir)
     spark.stop()

@@ -13,18 +13,4 @@ package org.apache.spark
 object GraftSparkBridge {
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Wrap a raw stream of a compressed Spark event log with the named
-    * codec (`zstd` is the event-log default). `CompressionCodec` is
-    * `private[spark]`; [[graft.tools.EventLogDigest]] needs it to read
-    * the bench forensics logs without a Spark history server.
-    * CONTINUOUS mode, as Spark's own EventLogFileReader uses
-    * (SPARK-26283): a log from a crashed/killed JVM — the run you most
-    * want to digest — ends in an unterminated frame, and non-continuous
-    * zstd decoding would throw there (or stop at the first frame
-    * boundary of a multi-frame file). */
-  def eventLogInputStream(in: java.io.InputStream,
-      codecName: String): java.io.InputStream =
-    io.CompressionCodec.createCodec(new SparkConf(), codecName)
-      .compressedContinuousInputStream(in)
 }

@@ -1606,4 +1606,49 @@ class OperatorPropertiesSpec extends SparkSuite {
       .sortBy { case (c, s) => (-s, c) }.take(5).map(_._1)
     assert(got == expect, s"routed=$got expected=$expect")
   }
+
+  /** Random frames with heavy sort-key ties: g in [0, 5), s in [0, 4),
+    * id unique — the tie-break alone decides the survivors at k. */
+  private def tiedFrame(seed: Int) = {
+    import spark.implicits._
+    val df = spark.range(0L, 600L, 1L, 4).select(
+      pmod(hash($"id", lit(seed)), lit(5)).as("g"),
+      pmod(hash($"id", lit(seed + 1)), lit(4)).as("s"), $"id")
+    (df, df.as[(Int, Int, Long)].collect().toSeq)
+  }
+
+  test("topKPerGroup == per-group sort-and-take under heavy key ties; " +
+      "plans WindowGroupLimit") {
+    import spark.implicits._
+    for ((seed, k) <- Seq((1, 1), (2, 3), (3, 7))) {
+      val (df, rows) = tiedFrame(seed)
+      val got = graft.operators.Operators.topKPerGroup(df, Seq($"g"),
+        Seq($"s".desc), $"id".asc, k)
+      val want = rows.groupBy(_._1).values.flatMap(
+        _.sortBy(r => (-r._2, r._3)).take(k).zipWithIndex
+          .map { case ((g, s, id), i) => (g, s, id, i + 1L) }).toSet
+      assert(got.select($"g", $"s", $"id", $"rank")
+        .as[(Int, Int, Long, Long)].collect().toSet == want, s"seed $seed")
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"), plan)
+    }
+  }
+
+  test("topK == global sort-and-take under heavy key ties; plans " +
+      "TakeOrderedAndProject with no single-partition exchange") {
+    import spark.implicits._
+    for ((seed, k) <- Seq((4, 1), (5, 5), (6, 40))) {
+      val (df, rows) = tiedFrame(seed)
+      val got = graft.operators.Operators.topK(df,
+        Seq($"s".desc, $"g".asc), $"id".asc, k)
+      val want = rows.sortBy(r => (-r._2, r._1, r._3)).take(k).zipWithIndex
+        .map { case ((g, s, id), i) => (i + 1L, g, s, id) }
+      assert(got.select($"rank", $"g", $"s", $"id")
+        .as[(Long, Int, Int, Long)].collect().sortBy(_._1).toSeq == want,
+        s"seed $seed")
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("TakeOrderedAndProject"), plan)
+      assert(!plan.contains("Exchange SinglePartition"), plan)
+    }
+  }
 }
