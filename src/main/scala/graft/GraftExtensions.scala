@@ -9,7 +9,7 @@ import graft.functions.VectorExpressions.{DimCountVector, FloatVecDot, LongVecSq
 /** SparkSessionExtensions entry point: registers the library's native
   * expressions as SQL functions so `spark.sql` text can call them.
   *
-  *   SparkSession.builder.withExtensions(new GraftExtensions) ...
+  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   *   -- or --
   *   spark.sql.extensions=graft.GraftExtensions
   *

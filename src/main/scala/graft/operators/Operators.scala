@@ -75,15 +75,15 @@ object Operators {
 
   /** Global top-k: `orderBy(order :+ tieBreak).limit(k)` first — one
     * TakeOrderedAndProject, each task keeps its own k best and only
-    * those reach the driver — then a long `rankCol` over the ≤ k
+    * those reach the driver — then a long `rank` column over the ≤ k
     * survivors. The rank window's AllTuples requirement is met by the
     * limit's single-partition output, so no exchange is added. Same
     * `tieBreak` contract as [[topKPerGroup]]. */
-  def topK(df: DataFrame, order: Seq[Column], tieBreak: Column, k: Int,
-      rankCol: String = "rank"): DataFrame = {
+  def topK(df: DataFrame, order: Seq[Column], tieBreak: Column,
+      k: Int): DataFrame = {
     val o = order :+ tieBreak
     df.orderBy(o: _*).limit(k)
-      .withColumn(rankCol, row_number().over(Window.orderBy(o: _*)).cast("long"))
+      .withColumn("rank", row_number().over(Window.orderBy(o: _*)).cast("long"))
   }
 
   /** Deterministic keep-first dedup: rank-1 per key by `order` — unlike

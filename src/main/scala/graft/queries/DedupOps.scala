@@ -1074,13 +1074,11 @@ object DedupOps {
     * shuffle on cluster_id, no global ordering anywhere). */
   def dedupCorpus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"cluster_id")
-      .orderBy($"n_chars".desc, $"doc_id".asc)
-    Tables(spark, dir, "documents")
+    val labelled = Tables(spark, dir, "documents")
       .select($"doc_id", $"n_chars")
       .join(clusterLabels(spark, dir), "doc_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    Operators.dedupKeepFirst(labelled, Seq("cluster_id"),
+        Seq($"n_chars".desc), $"doc_id".asc)
       .select($"doc_id", $"cluster_id")
   }
 

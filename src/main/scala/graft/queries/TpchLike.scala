@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.operators.Operators
 import graft.sources.Tables
 
 /** Relational operator inventory (SURVEY.md §2.3-§2.8) expressed over the
@@ -87,16 +87,13 @@ object TpchLike {
       |JOIN nation ON c_nationkey = n_nationkey
       |GROUP BY n_name""".stripMargin
 
-  /** Top-1-per-group via row_number — the reference's as-of rank idiom
+  /** Top-1-per-group via a row_number rank — the reference's as-of rank idiom
     * (`src/plane_naolib_consumer.py:102-104`, SURVEY §2.7). Tiebreak on
     * o_orderkey makes the pick deterministic. */
   def topOrderPerCustomer(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"o_custkey")
-      .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
-    Tables(spark, dir, "orders")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    Operators.dedupKeepFirst(Tables(spark, dir, "orders"), Seq("o_custkey"),
+        Seq($"o_totalprice".desc), $"o_orderkey".asc)
       .select($"o_custkey", $"o_orderkey", $"o_totalprice")
   }
 
