@@ -57,6 +57,29 @@ import org.apache.spark.sql.functions._
   * default on — the periodic verification, not per-tick cost). */
 object IngestMain {
 
+  /** The rebuild probe of the ingest mains: does directory `dir` hold
+    * the `_SUCCESS` marker of a committed write? Asked through the
+    * Hadoop FileSystem of the path, so it sees HDFS, S3 and `file:`
+    * URIs (a local-file check would always miss on those, and every
+    * tick would rebuild its indexes from the corpus). The probe
+    * REQUIRES the committer to write markers (`marksuccessfuljobs`,
+    * default true): with it off every tick would silently rebuild from
+    * scratch — idempotent but O(corpus) per tick — so it fails loudly
+    * instead, naming the calling `main` (ADVICE r14). */
+  private[graft] def committedProbe(spark: SparkSession,
+      main: String): String => Boolean = {
+    val hconf = spark.sessionState.newHadoopConf()
+    require(hconf.getBoolean(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", true),
+      s"$main's rebuild probes key on _SUCCESS markers; run the " +
+        "session with mapreduce.fileoutputcommitter." +
+        "marksuccessfuljobs=true (the default)")
+    dir => {
+      val marker = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
+      marker.getFileSystem(hconf).exists(marker)
+    }
+  }
+
   /** Runs the tick into `outDir`; returns the reconciliation counters
     * (insertion-ordered for the JSON dump). Throws if any invariant
     * fails. `auditRebuild` controls the maintained-equals-rebuilt
@@ -95,19 +118,12 @@ object IngestMain {
     // bare-directory probe would accept a crash-torn partial write —
     // the marker exists only after the commit, and both builders write
     // mode("overwrite"), so the retried rebuild cleans the debris
-    // (ADVICE r13). The probes REQUIRE the committer to write markers
-    // (`marksuccessfuljobs`, default true): with it off every tick
-    // would silently rebuild from scratch — idempotent but O(corpus)
-    // per tick — so fail loudly instead (ADVICE r14).
-    require(spark.sessionState.newHadoopConf()
-        .getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true),
-      "IngestMain's rebuild probes key on _SUCCESS markers; run the " +
-        "ingest session with mapreduce.fileoutputcommitter." +
-        "marksuccessfuljobs=true (the default)")
-    if (!new java.io.File(s"$postingPath/docs/_SUCCESS").exists())
+    // (ADVICE r13).
+    val committed = committedProbe(spark, "IngestMain")
+    if (!committed(s"$postingPath/docs"))
       TextOps.postingWriteIndexOf(corpus.select($"doc_id", $"text"),
         postingPath)
-    if (!new java.io.File(s"$chunkPath.codebook/_SUCCESS").exists())
+    if (!committed(s"$chunkPath.codebook"))
       VectorOps.chunkWriteIndexOf(corpus.select($"doc_id", $"text"),
         chunkPath)
     val postingsBefore = spark.read.parquet(s"$postingPath/postings").count()
@@ -124,7 +140,7 @@ object IngestMain {
     // (StreamingSpec asserts it); delta doc_ids are unique here, so
     // the joined form's per-doc rollup is the identity on row counts.
     val scorerModelPath = s"$outDir/scorer_model"
-    if (!new java.io.File(s"$scorerModelPath/_SUCCESS").exists())
+    if (!committed(scorerModelPath))
       StreamingQueries.writeScorerModel(corpus, scorerModelPath)
     val admission =
       StreamingQueries.calibratedScorerJoined(corpus, scorerModelPath)(delta)

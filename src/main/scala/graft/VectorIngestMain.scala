@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +52,7 @@ import org.apache.spark.sql.functions._
   *
   * Re-running the tick against the same out directory converges: the
   * standing `edges` table is reused via its `_SUCCESS` probe (the
-  * ADVICE-r13 marker contract, same `require` as IngestMain), and
+  * ADVICE-r13 marker contract, [[IngestMain.committedProbe]]), and
   * both maintenance paths are overwrite-shaped. 100 TB: per-tick cost
   * is O(delta) lifts + bounded hop joins against stored adjacency —
   * the rebuild branch is the only corpus-sized path, which is
@@ -104,20 +105,9 @@ object VectorIngestMain {
     val nCorpus = corpus.count()
     val nDelta = delta.count()
 
-    require(spark.sessionState.newHadoopConf()
-        .getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true),
-      "VectorIngestMain's rebuild probe keys on _SUCCESS markers; run " +
-        "with mapreduce.fileoutputcommitter.marksuccessfuljobs=true " +
-        "(the default)")
-    // storage probes go through the Hadoop FileSystem of the out path
-    // (ADVICE r14: java.io.File only sees the local FS — on HDFS/S3 the
-    // probe would always miss and every tick would rebuild, and the
-    // rebuild path could never retire edges_delta)
-    val hconf = spark.sessionState.newHadoopConf()
-    import org.apache.hadoop.fs.Path
+    val committed = IngestMain.committedProbe(spark, "VectorIngestMain")
     val graphPath = s"$outDir/knn_graph"
-    val fs = new Path(graphPath).getFileSystem(hconf)
-    if (!fs.exists(new Path(s"$graphPath/edges/_SUCCESS")))
+    if (!committed(s"$graphPath/edges"))
       KnnGraphOps.knnGraphWriteIndexOf(corpus, graphPath)
     val edgesBefore = spark.read.parquet(s"$graphPath/edges").count()
 
@@ -170,7 +160,10 @@ object VectorIngestMain {
       s"survivors $nSurvivors != delta $nDelta - dups $nDup")
 
     // ---- stage 3: maintenance per the verdict
+    // through the Hadoop FileSystem, like the probe: on HDFS/S3 a
+    // java.io.File check would never see edges_delta to retire it
     val deltaDir = new Path(s"$graphPath/edges_delta")
+    val fs = deltaDir.getFileSystem(spark.sessionState.newHadoopConf())
     var appended = 0L
     var unrouted = 0L
     var rebuildRounds = 0L

@@ -385,6 +385,43 @@ object DedupOps {
       (0 until numBands).map(j =>
         expr(s"xxhash64(${j}L, mh[${j * 2}], mh[${j * 2 + 1}])")): _*)))
 
+  /** The exact verify every LSH candidate set ends in: adds `jaccard`,
+    * the shingle Jaccard of array columns `a` and `b`, and keeps the
+    * pairs at J ≥ 0.5. */
+  private[graft] def verifyJaccard(candidates: DataFrame, a: String,
+      b: String): DataFrame =
+    candidates
+      .withColumn("jaccard",
+        size(array_intersect(col(a), col(b))).cast("double") /
+          size(array_union(col(a), col(b))))
+      .filter(col("jaccard") >= 0.5)
+
+  /** The corpus side of the LSH index from one
+    * [[withShinglesAndMinhash]] lift: the band-key table
+    * (doc_id, band_key) candidate generation joins on, and the shingle
+    * table (doc_id, sh) verification reads.
+    * [[DedupFusionOps.lshWriteIndex]] writes these two tables; the
+    * stream twins persist them in-session. */
+  private[graft] def lshIndexOf(lifted: DataFrame): (DataFrame, DataFrame) =
+    (explodeBandKeys(lifted).select(col("doc_id"), col("band_key")),
+      lifted.select(col("doc_id"), col("sh")))
+
+  /** Arriving documents (doc_id, text, ...) probed against an
+    * [[lshIndexOf]] index: lift, band-join, drop self matches, verify.
+    * One row per (doc, band) collision that verifies — the arriving
+    * and lifted columns plus `b_id`, `b_sh` and `jaccard`; callers
+    * project and dedup the pairs. */
+  private[graft] def nearDupProbe(docs: DataFrame, bands: DataFrame,
+      shingles: DataFrame): DataFrame =
+    verifyJaccard(
+      explodeBandKeys(withShinglesAndMinhash(docs))
+        .join(bands.select(col("doc_id").as("b_id"), col("band_key")),
+          "band_key")
+        .filter(col("doc_id") =!= col("b_id"))
+        .join(shingles.select(col("doc_id").as("b_id"), col("sh").as("b_sh")),
+          "b_id"),
+      "sh", "b_sh")
+
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = withShinglesAndMinhash(
@@ -410,13 +447,10 @@ object DedupOps {
     // saves here (measured); the hash-based built-in wins. q41, whose
     // pair volume amortizes the sort, uses the merge-scan form.
     val shingles = docs.select($"doc_id", $"sh")
-    candidates
+    verifyJaccard(candidates
       .join(shingles.select($"doc_id".as("a_id"), $"sh".as("a_sh")), "a_id")
-      .join(shingles.select($"doc_id".as("b_id"), $"sh".as("b_sh")), "b_id")
-      .withColumn("jaccard",
-        size(array_intersect($"a_sh", $"b_sh")).cast("double") /
-          size(array_union($"a_sh", $"b_sh")))
-      .filter($"jaccard" >= 0.5)
+      .join(shingles.select($"doc_id".as("b_id"), $"sh".as("b_sh")), "b_id"),
+      "a_sh", "b_sh")
       .select($"a_id", $"b_id", $"jaccard")
   }
 
@@ -655,6 +689,25 @@ object DedupOps {
   private[graft] def isSharedArtifact(df: DataFrame): Boolean = Artifacts.holds(df)
   def invalidateSharedArtifacts(): Unit = Artifacts.invalidateAll()
 
+  /** Round count of the most recent [[dupClusters]] convergence —
+    * observability for the 10× stress harness and tests (the algorithm
+    * contract is O(diameter) rounds; this makes the actual count
+    * checkable instead of asserted). */
+  @volatile private[graft] var lastClusterRounds: Int = -1
+
+  /** Both directions (u, v) of an (a_id, b_id) pair table from ONE
+    * scan of it — a self-union would materialize the whole LSH
+    * candidate+verify lineage twice (only identical exchanges get
+    * ReuseExchange'd). */
+  private def undirected(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs.select(explode(array(
+        struct($"a_id".as("u"), $"b_id".as("v")),
+        struct($"b_id".as("u"), $"a_id".as("v")))).as("e"))
+      .select($"e.u".as("u"), $"e.v".as("v"))
+  }
+
   /** Duplicate-cluster assignment: connected components over the
     * verified near-dup pair graph ([[minhashLsh]] output == exact
     * shingle J ≥ 0.5), every document labeled with the minimum doc_id
@@ -669,26 +722,14 @@ object DedupOps {
     * components are tiny quasi-cliques (diameter 1-2 in practice), so
     * the round count stays small at any corpus size; the driver touches
     * only the per-round convergence COUNT, never row data. The
-    * large-star/small-star variant (Kiveris et al.) is the drop-in
-    * upgrade if a pathological long-chain graph ever appears. */
-  /** Round count of the most recent [[dupClusters]] convergence —
-    * observability for the 10× stress harness and tests (the algorithm
-    * contract is O(diameter) rounds; this makes the actual count
-    * checkable instead of asserted). */
-  @volatile private[graft] var lastClusterRounds: Int = -1
-
+    * large-star/small-star variant (Kiveris et al.) is
+    * [[graft.operators.Operators.connectedComponentsStar]] (q105,
+    * [[dupClustersStar]]); folding the two into one operator is
+    * ROADMAP item 4, blocked on the star form's per-round job count. */
   def dupClusters(spark: SparkSession, dir: String,
       maxRounds: Int = 50): DataFrame = {
     import spark.implicits._
-    // both edge directions from ONE scan of the pair pipeline — a
-    // self-union would materialize the whole LSH candidate+verify
-    // lineage twice (only identical exchanges get ReuseExchange'd)
-    val edges = verifiedPairs(spark, dir)
-      .select(explode(array(
-        struct($"a_id".as("u"), $"b_id".as("v")),
-        struct($"b_id".as("u"), $"a_id".as("v")))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"))
-      .persist()
+    val edges = undirected(verifiedPairs(spark, dir)).persist()
     // min-label propagation on the shared iterate-to-fixpoint harness
     // (extracted from this loop, VERDICT r5 #1): per round one
     // equi-join of labels onto edge endpoints + one partial-
@@ -834,11 +875,7 @@ object DedupOps {
   def dupPagerank(spark: SparkSession, dir: String,
       rounds: Int = 3): DataFrame = {
     import spark.implicits._
-    val edges = verifiedPairs(spark, dir)
-      .select(explode(array(
-        struct($"a_id".as("u"), $"b_id".as("v")),
-        struct($"b_id".as("u"), $"a_id".as("v")))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"))
+    val edges = undirected(verifiedPairs(spark, dir))
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("deg"))
     val docs = Tables(spark, dir, "documents").select($"doc_id")
     // fixed-round fold on the shared harness (VERDICT r5 #1): the
@@ -897,10 +934,7 @@ object DedupOps {
   private[graft] def triangleCountsOf(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val sym = pairs.select(explode(array(
-        struct($"a_id".as("u"), $"b_id".as("v")),
-        struct($"b_id".as("u"), $"a_id".as("v")))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"))
+    val sym = undirected(pairs)
     val deg = sym.groupBy($"u").agg(count(lit(1)).as("deg"))
     // a_id < b_id on input, so deg ties orient a→b
     val o = pairs
@@ -975,12 +1009,7 @@ object DedupOps {
       maxRounds: Int = KCoreMaxRounds): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val sym = pairs
-      .select(explode(array(
-        struct($"a_id".as("u"), $"b_id".as("v")),
-        struct($"b_id".as("u"), $"a_id".as("v")))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"))
-      .persist()
+    val sym = undirected(pairs).persist()
     val (fin, _, converged) = graft.operators.Operators.iterateCheckpointed(
         sym, maxRounds, stopMaterializes = true) { (st, _) =>
       val keep = st.groupBy($"u").agg(count(lit(1)).as("deg"))

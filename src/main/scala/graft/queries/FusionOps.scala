@@ -131,14 +131,10 @@ object DedupFusionOps {
         col("y.is_delta").as("m_delta"))
       .distinct()
     val shingles = lifted.select($"doc_id", $"sh")
-    candidates
+    DedupOps.verifyJaccard(candidates
       .join(shingles.select($"doc_id".as("new_id"), $"sh".as("a_sh")), "new_id")
       .join(shingles.select($"doc_id".as("match_id"), $"sh".as("b_sh")),
-        "match_id")
-      .withColumn("jaccard",
-        size(array_intersect($"a_sh", $"b_sh")).cast("double") /
-          size(array_union($"a_sh", $"b_sh")))
-      .filter($"jaccard" >= 0.5)
+        "match_id"), "a_sh", "b_sh")
       .select($"new_id", $"match_id",
         when($"m_delta", "delta").otherwise("corpus").as("match_side"),
         $"jaccard")
@@ -176,10 +172,9 @@ object DedupFusionOps {
     val lifted = DedupOps.withShinglesAndMinhash(
         docs(spark, dir).filter(!isDeltaCol).select($"doc_id", $"text"))
       .persist()
-    lifted.select($"doc_id", $"sh")
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    DedupOps.explodeBandKeys(lifted).select($"doc_id", $"band_key")
-      .write.mode("overwrite").parquet(s"$path/bands")
+    val (bands, shingles) = DedupOps.lshIndexOf(lifted)
+    shingles.write.mode("overwrite").parquet(s"$path/shingles")
+    bands.write.mode("overwrite").parquet(s"$path/bands")
     lifted.unpersist(blocking = false)
   }
 
@@ -211,15 +206,11 @@ object DedupFusionOps {
     val candidates = candCorpus.union(candDelta).distinct()
     val dShingles = delta.select($"doc_id", $"sh")
     val mShingles = spark.read.parquet(s"$path/shingles").union(dShingles)
-    candidates
+    DedupOps.verifyJaccard(candidates
       .join(dShingles.select($"doc_id".as("new_id"), $"sh".as("a_sh")),
         "new_id")
       .join(mShingles.select($"doc_id".as("match_id"), $"sh".as("b_sh")),
-        "match_id")
-      .withColumn("jaccard",
-        size(array_intersect($"a_sh", $"b_sh")).cast("double") /
-          size(array_union($"a_sh", $"b_sh")))
-      .filter($"jaccard" >= 0.5)
+        "match_id"), "a_sh", "b_sh")
       .select($"new_id", $"match_id",
         when($"m_delta", "delta").otherwise("corpus").as("match_side"),
         $"jaccard")

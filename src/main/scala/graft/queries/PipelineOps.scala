@@ -3414,21 +3414,27 @@ object PipelineOps {
     * 100 TB: one scan, one tiny-key shuffle. */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    tokenizeCorpus(spark, dir)
+    fertilityOf(tokenizeCorpus(spark, dir)
       .join(Tables(spark, dir, "documents").select($"doc_id", $"source"),
-        "doc_id")
-      .groupBy($"source")
+        "doc_id"))
+  }
+
+  /** q135's per-source rollup of per-document (source, n_pretokens,
+    * n_chars, n_symbols) counts, with its two integer ratio columns.
+    * Shared with [[graft.streaming.StreamingQueries.fertilityStream]]. */
+  private[graft] def fertilityOf(perDoc: DataFrame): DataFrame =
+    perDoc
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum($"n_pretokens").as("n_pretokens"),
-        sum($"n_chars").as("n_chars"),
-        sum($"n_symbols").as("n_symbols"))
+        sum(col("n_pretokens")).as("n_pretokens"),
+        sum(col("n_chars")).as("n_chars"),
+        sum(col("n_symbols")).as("n_symbols"))
       .withColumn("symbols_per_kchar",
         expr("CAST(IF(n_chars = 0, 0, (1000 * n_symbols) div n_chars) " +
           "AS BIGINT)"))
       .withColumn("saved_pct",
         expr("CAST(IF(n_chars = 0, 0, (100 * (n_chars - n_symbols)) " +
           "div n_chars) AS BIGINT)"))
-  }
 
   private val tokenizerFertilitySql = tokenizeCtes + "\n" +
     """SELECT d.source,

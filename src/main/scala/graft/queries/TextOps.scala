@@ -1489,23 +1489,32 @@ object TextOps {
     val gb = ub.crossJoin(broadcast(tot))
       .select($"doc_id",
         ($"mean_freq_scaled" >= expr("tf * 1000000 div tn")).as("gb"))
-    ga.join(gb, "doc_id")
+    agreementOf(ga.join(gb, "doc_id"))
+  }
+
+  /** q186's tail over a frame of (ga, gb) gate booleans: the 2×2
+    * confusion sums, observed/expected agreement in ppm and the kappa
+    * numerator/denominator. Shared with
+    * [[graft.streaming.StreamingQueries.agreementMonitorStream]], which
+    * keeps its own gate expressions. */
+  private[graft] def agreementOf(gates: DataFrame): DataFrame =
+    gates.groupBy()
       .agg(
-        sum(when($"ga" && $"gb", 1L).otherwise(0L)).as("n11"),
-        sum(when($"ga" && !$"gb", 1L).otherwise(0L)).as("n10"),
-        sum(when(!$"ga" && $"gb", 1L).otherwise(0L)).as("n01"),
-        sum(when(!$"ga" && !$"gb", 1L).otherwise(0L)).as("n00"))
-      .select($"n11", $"n10", $"n01", $"n00",
+        sum(when(col("ga") && col("gb"), 1L).otherwise(0L)).as("n11"),
+        sum(when(col("ga") && !col("gb"), 1L).otherwise(0L)).as("n10"),
+        sum(when(!col("ga") && col("gb"), 1L).otherwise(0L)).as("n01"),
+        sum(when(!col("ga") && !col("gb"), 1L).otherwise(0L)).as("n00"))
+      .select(col("n11"), col("n10"), col("n01"), col("n00"),
         expr("(n11 + n00) * 1000000 div (n11 + n10 + n01 + n00)")
           .as("po_ppm"),
         expr("(((n11 + n10) * 1000000 div (n11 + n10 + n01 + n00)) " +
           "* (n11 + n01) + ((n01 + n00) * 1000000 div " +
           "(n11 + n10 + n01 + n00)) * (n10 + n00)) div " +
           "(n11 + n10 + n01 + n00)").as("pe_ppm"))
-      .select($"n11", $"n10", $"n01", $"n00", $"po_ppm", $"pe_ppm",
-        ($"po_ppm" - $"pe_ppm").as("kappa_num_ppm"),
-        (lit(1000000L) - $"pe_ppm").as("kappa_den_ppm"))
-  }
+      .select(col("n11"), col("n10"), col("n01"), col("n00"),
+        col("po_ppm"), col("pe_ppm"),
+        (col("po_ppm") - col("pe_ppm")).as("kappa_num_ppm"),
+        (lit(1000000L) - col("pe_ppm")).as("kappa_den_ppm"))
 
   private val scorerAgreementSql = unigramCtes + ",\n" +
     """ga AS (SELECT doc_id,

@@ -47,6 +47,33 @@ object Tables {
     } else spark.read.parquet(path)
   }
 
+  /** Width an under-parallelized frame is fanned to: the session's
+    * parallelism, capped at [[DefaultFanMax]] on a local session. The
+    * fan exists for CPU-dense lifts whose parallel efficiency collapses
+    * well before 32 concurrent tasks on one socket: the r17 driver run
+    * showed `repartition(32)` INVERTING the fan's win under box
+    * contention (q101 2.3 s at 8 cores → 10.0 s at 32), and the r18
+    * A/B at an idle 32-core box measured the capped fan within noise of
+    * the full-width one (per-task fixed overhead dominates past ~16
+    * tasks) while shrinking every fanned stage's task count. That is a
+    * one-socket effect: on a cluster the slots span executors, so the
+    * width is the full parallelism and the cap never becomes a
+    * production ceiling. At low core counts the cap is inactive. */
+  private[graft] def fanWidth(spark: SparkSession): Int =
+    fanWidthOf(spark.sparkContext.defaultParallelism,
+      spark.sparkContext.isLocal)
+
+  private[graft] def fanWidthOf(parallelism: Int, isLocal: Boolean): Int =
+    if (isLocal) math.min(parallelism, DefaultFanMax) else parallelism
+
+  /** r18 A/B at 32 cores over the 39 fanned queries + riders (cold
+    * JVM each): cap 16 totals 71.4 s / 465 CPU-s / 6,306 tasks vs
+    * full-width 73.9 s / 620 CPU-s / 7,595 tasks vs cap 8 74.2 s —
+    * the capped fan is at-or-better on wall while doing 25 % less
+    * CPU and scheduling 17 % fewer tasks, exactly the robustness a
+    * contended 32-core box (the r17 driver run) banks. */
+  private[graft] val DefaultFanMax = 16
+
   /** Scale-adaptive fan-out of a table read (optimization guide §2.5,
     * "input skew: one huge unsplittable file... repartition immediately
     * after the read", applied to the small-file end): a parquet file
@@ -56,46 +83,14 @@ object Tables {
     * measured at sf0.1: q41's whole 1.2M-pair merge-scan executed in
     * the single 594 KB `documents` scan task (wall ≈ executorRun ≈
     * one core). When the file would yield fewer splits than the
-    * session's parallelism, round-robin repartition to
-    * defaultParallelism — a one-file-sized exchange that unlocks every
-    * core. At production scale (file bytes ≫ cores × maxPartitionBytes)
-    * the condition is false and this is the IDENTITY: no extra
+    * session's parallelism, round-robin repartition to [[fanWidth]] —
+    * a one-file-sized exchange that unlocks every core. At production
+    * scale (file bytes ≫ cores × maxPartitionBytes) the condition is
+    * false and this is the IDENTITY: no extra
     * exchange in any plan, so the fan-out never costs a 100 TB run
     * anything. Round-robin is retry-safe (sortBeforeRepartition stays
     * on) and every consumer is order-insensitive (joins/aggregates/
     * totally-ordered windows). */
-  /** Width an under-parallelized frame is fanned to. Capped below the
-    * session's core count (`GRAFT_FAN_MAX`, default [[DefaultFanMax]])
-    * because the fan exists for CPU-dense lifts whose parallel
-    * efficiency collapses well before 32 concurrent tasks on one
-    * socket: the r17 driver run showed `repartition(32)` INVERTING the
-    * fan's win under box contention (q101 2.3 s at 8 cores → 10.0 s at
-    * 32), and the r18 A/B at an idle 32-core box measured the capped
-    * fan within noise of the full-width one (per-task fixed overhead
-    * dominates past ~16 tasks) while shrinking every fanned stage's
-    * task count — fewer tasks is robustness a contended box banks
-    * directly. At low core counts the cap is inactive (min). */
-  private[graft] def fanWidth(spark: SparkSession): Int = {
-    val p = spark.sparkContext.defaultParallelism
-    // defensive parse (self-review r18): a malformed or non-positive
-    // override must degrade to the default, not crash every fanned
-    // query with a NumberFormatException / repartition(0)
-    val cap = sys.env.get("GRAFT_FAN_MAX")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(DefaultFanMax)
-    math.min(p, cap)
-  }
-
-  /** r18 A/B at 32 cores over the 39 fanned queries + riders (cold
-    * JVM each): cap 16 totals 71.4 s / 465 CPU-s / 6,306 tasks vs
-    * full-width 73.9 s / 620 CPU-s / 7,595 tasks vs cap 8 74.2 s —
-    * the capped fan is at-or-better on wall while doing 25 % less
-    * CPU and scheduling 17 % fewer tasks, exactly the robustness a
-    * contended 32-core box (the r17 driver run) banks. At ≤ 16 cores
-    * the cap is inactive. */
-  private[graft] val DefaultFanMax = 16
-
   def fanned(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = apply(spark, dir, name)
     val p = spark.sparkContext.defaultParallelism

@@ -131,8 +131,6 @@ object StreamingQueries {
       eventTime: String = "ingest_ts",
       delay: String = "10 seconds"): DataFrame = {
     import graft.queries.DedupOps
-    val corpusLift = DedupOps.withShinglesAndMinhash(
-      corpus.select(col("doc_id"), col("text")))
     // persist the static index sides: without it EVERY micro-batch
     // re-scans and re-minhashes the whole corpus — twice (band and
     // shingle branches are separate lineages). These cached frames are
@@ -140,21 +138,14 @@ object StreamingQueries {
     // deployment writes to storage once; blocks are reclaimed when the
     // caller's session drops them (or unpersist explicitly for
     // long-lived JVMs).
-    val corpusBands = DedupOps.explodeBandKeys(corpusLift)
-      .select(col("doc_id").as("b_id"), col("band_key")).persist()
-    val corpusShingles = corpusLift
-      .select(col("doc_id").as("b_id"), col("sh").as("b_sh")).persist()
-    val streamBands = DedupOps.explodeBandKeys(
-        DedupOps.withShinglesAndMinhash(docs.withWatermark(eventTime, delay)))
-      .select(col("doc_id"), col(eventTime), col("sh"), col("band_key"))
-    streamBands
-      .join(corpusBands, "band_key")
-      .filter(col("doc_id") =!= col("b_id"))
-      .join(corpusShingles, "b_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh"), col("b_sh"))).cast("double") /
-          size(array_union(col("sh"), col("b_sh"))))
-      .filter(col("jaccard") >= 0.5)
+    val (bands, shingles) =
+      DedupOps.lshIndexOf(DedupOps.withShinglesAndMinhash(corpus))
+    DedupOps.nearDupProbe(docs.withWatermark(eventTime, delay),
+        bands.persist(), shingles.persist())
+      // project before the dedup: its state holds whole rows, and the
+      // texts and shingle arrays the probe carries are not needed past
+      // the verify
+      .select(col("doc_id"), col("b_id"), col(eventTime), col("jaccard"))
       .dropDuplicatesWithinWatermark("doc_id", "b_id")
       .select(col("doc_id"), col("b_id"), col("jaccard"))
   }
@@ -342,11 +333,6 @@ object StreamingQueries {
   def calibratedScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame =
     calibratedScorer(corpus)(docs)
 
-  /** The calibrated-gate TRANSFORM with its corpus parameters hoisted:
-    * derives the frozen parameter tables once and returns the
-    * stateless per-row scorer — so a caller that gates every
-    * micro-batch ([[admissionStream]]) pays the corpus read once, not
-    * per batch. [[calibratedScoreStream]] is this applied directly. */
   /** The deployed LM's vocabulary size: the scorer's driver-side
     * parameter is the top-[[CalVocabCap]] terms by corpus mass, never
     * the raw vocabulary (unbounded at corpus scale). */
@@ -400,19 +386,31 @@ object StreamingQueries {
         when(col("src_pct") > graft.queries.TextOps.CalPctCut, 1L)
           .otherwise(0L))
 
+  /** The scorer's vocabulary model: term → corpus frequency, the
+    * top-`vocabCap` terms by mass (ties by term asc — deterministic).
+    * TakeOrderedAndProject, so the read is bounded regardless of
+    * corpus vocabulary. [[writeScorerModel]] writes this (term, f)
+    * table; [[vocabMap]] hoists it into a literal map. */
+  private def vocabModel(corpus: DataFrame, vocabCap: Int): DataFrame =
+    corpus
+      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("term"))
+      .filter(col("term") =!= "")
+      .groupBy(col("term")).agg(count(lit(1)).as("f"))
+      .orderBy(col("f").desc, col("term").asc).limit(vocabCap)
+
+  /** [[vocabModel]] collected into a term → f literal map. */
+  private def vocabMap(corpus: DataFrame, vocabCap: Int): Column =
+    map(vocabModel(corpus, vocabCap).collect().toIndexedSeq
+      .flatMap(r => Seq(lit(r.getString(0)), lit(r.getLong(1)))): _*)
+
+  /** The calibrated-gate TRANSFORM with its corpus parameters hoisted:
+    * derives the frozen parameter tables once and returns the
+    * stateless per-row scorer — so a caller that gates every
+    * micro-batch ([[admissionStream]]) pays the corpus read once, not
+    * per batch. [[calibratedScoreStream]] is this applied directly. */
   def calibratedScorer(corpus: DataFrame,
       vocabCap: Int = CalVocabCap): DataFrame => DataFrame = {
-    // model: term → corpus frequency, top-vocabCap by mass (ties by
-    // term asc — deterministic). TakeOrderedAndProject, so the read
-    // is bounded regardless of corpus vocabulary.
-    val freq = corpus
-      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("t"))
-      .filter(col("t") =!= "")
-      .groupBy(col("t")).agg(count(lit(1)).as("f"))
-      .orderBy(col("f").desc, col("t").asc).limit(vocabCap)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val freqMap = map(freq.toIndexedSeq.flatMap { case (t, f) =>
-      Seq(lit(t), lit(f)) }: _*)
+    val freqMap = vocabMap(corpus, vocabCap)
     val (histMap, totMap) = calibrationParams(corpus)
     (docs: DataFrame) => calibrationTail(histMap, totMap)(docs
       .withColumn("tk", filter(
@@ -428,17 +426,11 @@ object StreamingQueries {
   }
 
   /** Persist the scorer's model as a physical artifact: the
-    * top-`vocabCap`-by-mass (term, f) table, the same
-    * TakeOrderedAndProject cut [[calibratedScorer]] hoists — written
-    * once beside the serving indexes, read by
-    * [[calibratedScorerJoined]]. */
+    * [[vocabModel]] table [[calibratedScorer]] hoists — written once
+    * beside the serving indexes, read by [[calibratedScorerJoined]]. */
   def writeScorerModel(corpus: DataFrame, path: String,
       vocabCap: Int = CalVocabCap): Unit =
-    corpus
-      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col("term")).agg(count(lit(1)).as("f"))
-      .orderBy(col("f").desc, col("term").asc).limit(vocabCap)
+    vocabModel(corpus, vocabCap)
       .coalesce(1).write.mode("overwrite").parquet(path)
 
   /** The calibrated gate at DEPLOYMENT cap (VERDICT r12 #4): the
@@ -622,12 +614,9 @@ object StreamingQueries {
     import graft.queries.{DedupOps, PipelineOps}
     // frozen standing-corpus artifacts (in-session stand-ins for the
     // persisted tables a deployment writes once)
-    val corpusLift = DedupOps.withShinglesAndMinhash(
-      corpus.select(col("doc_id"), col("text")))
-    val corpusBands = DedupOps.explodeBandKeys(corpusLift)
-      .select(col("doc_id").as("b_id"), col("band_key")).persist()
-    val corpusShingles = corpusLift
-      .select(col("doc_id").as("b_id"), col("sh").as("b_sh")).persist()
+    val (bands, shingles) =
+      DedupOps.lshIndexOf(DedupOps.withShinglesAndMinhash(corpus))
+    bands.persist(); shingles.persist()
     val benchGrams = DedupOps.spanWindows(
         corpus.filter(substring(md5(concat(lit("bench:"),
           col("doc_id").cast("string"))), 1, 1) === "0"), 8)
@@ -640,13 +629,8 @@ object StreamingQueries {
         val spark = batch.sparkSession
         import spark.implicits._
         val b = batch.persist()
-        val dupHits = DedupOps.explodeBandKeys(
-            DedupOps.withShinglesAndMinhash(b.select($"doc_id", $"text")))
-          .join(corpusBands, "band_key")
-          .filter($"doc_id" =!= $"b_id")
-          .join(corpusShingles, "b_id")
-          .filter(size(array_intersect($"sh", $"b_sh")).cast("double") /
-            size(array_union($"sh", $"b_sh")) >= 0.5)
+        val dupHits = DedupOps.nearDupProbe(b.select($"doc_id", $"text"),
+            bands, shingles)
           .select($"doc_id").distinct()
           .withColumn("dup", lit(1L))
         val isBench = substring(md5(concat(lit("bench:"),
@@ -1025,26 +1009,19 @@ object StreamingQueries {
     * fails conservative, and the stream equals batch q186 exactly
     * whenever the corpus vocabulary fits the cap (every test corpus).
     * The cumulative counts live in ONE stateful aggregate (four
-    * conditional sums); the ppm/kappa arithmetic is q186's
-    * expressions verbatim, stateless over the aggregate row.
+    * conditional sums); the sums and the ppm/kappa arithmetic are
+    * q186's own [[graft.queries.TextOps.agreementOf]].
     * Stream == batch asserted in StreamingSpec. */
   def agreementMonitorStream(docs: DataFrame, corpus: DataFrame,
       vocabCap: Int = CalVocabCap): DataFrame = {
-    val freq = corpus
-      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("t"))
-      .filter(col("t") =!= "")
-      .groupBy(col("t")).agg(count(lit(1)).as("f"))
-      .orderBy(col("f").desc, col("t").asc).limit(vocabCap)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val freqMap = map(freq.toIndexedSeq.flatMap { case (t, f) =>
-      Seq(lit(t), lit(f)) }: _*)
+    val freqMap = vocabMap(corpus, vocabCap)
     // the corpus-mean threshold, exactly q186's scalar (full-vocab
     // batch lift — the model build may afford what serving cannot)
     val tot = graft.queries.TextOps.unigramScoreOf(corpus)
       .agg(sum(col("sum_freq")).as("tf"), sum(col("n_tokens")).as("tn"))
       .collect().head
     val thr = tot.getLong(0) * 1000000L / math.max(tot.getLong(1), 1L)
-    docs
+    graft.queries.TextOps.agreementOf(docs
       .withColumn("ga", size(expr(
         "filter(split(coalesce(text, ''), ' '), " +
           "x -> x IN ('the','a','of','and','to','in'))")).cast("long")
@@ -1057,24 +1034,7 @@ object StreamingQueries {
         (acc, t) => acc + coalesce(element_at(freqMap, t), lit(0L))))
       .withColumn("gb",
         expr(s"IF(n = 0, CAST(0 AS BIGINT), sf * 1000000 div n)")
-          >= lit(thr))
-      .groupBy()
-      .agg(
-        sum(when(col("ga") && col("gb"), 1L).otherwise(0L)).as("n11"),
-        sum(when(col("ga") && !col("gb"), 1L).otherwise(0L)).as("n10"),
-        sum(when(!col("ga") && col("gb"), 1L).otherwise(0L)).as("n01"),
-        sum(when(!col("ga") && !col("gb"), 1L).otherwise(0L)).as("n00"))
-      .select(col("n11"), col("n10"), col("n01"), col("n00"),
-        expr("(n11 + n00) * 1000000 div (n11 + n10 + n01 + n00)")
-          .as("po_ppm"),
-        expr("(((n11 + n10) * 1000000 div (n11 + n10 + n01 + n00)) " +
-          "* (n11 + n01) + ((n01 + n00) * 1000000 div " +
-          "(n11 + n10 + n01 + n00)) * (n10 + n00)) div " +
-          "(n11 + n10 + n01 + n00)").as("pe_ppm"))
-      .select(col("n11"), col("n10"), col("n01"), col("n00"),
-        col("po_ppm"), col("pe_ppm"),
-        (col("po_ppm") - col("pe_ppm")).as("kappa_num_ppm"),
-        (lit(1000000L) - col("pe_ppm")).as("kappa_den_ppm"))
+          >= lit(thr)))
   }
 
   /** q187's per-arrival form — the CHANGE FEED: each arriving document
@@ -1234,7 +1194,14 @@ object StreamingQueries {
     * form stays). Emits (doc_id, n_pretokens, n_chars, n_symbols),
     * q106's schema; stream==batch asserted in StreamingSpec. */
   def tokenizeStream(docs: DataFrame,
-      merges: Seq[graft.queries.PipelineOps.BpeMerge]): DataFrame = {
+      merges: Seq[graft.queries.PipelineOps.BpeMerge]): DataFrame =
+    tokenCounts(docs, merges, "doc_id")
+
+  /** [[tokenizeStream]]'s per-document counts with column `key` carried
+    * in place of doc_id. */
+  private def tokenCounts(docs: DataFrame,
+      merges: Seq[graft.queries.PipelineOps.BpeMerge],
+      key: String): DataFrame = {
     import graft.queries.PipelineOps
     // NULL text ⇒ zero-token row, NOT a dropped row: batch q106's
     // restore left-join counts every document (ADVICE r10 — a filter
@@ -1242,7 +1209,7 @@ object StreamingQueries {
     docs.withColumn("pt", regexp_extract_all(
         coalesce(col("text"), lit("")),
         lit(PipelineOps.preTokenPattern), lit(0)))
-      .select(col("doc_id"),
+      .select(col(key),
         size(col("pt")).cast("long").as("n_pretokens"),
         aggregate(col("pt"), lit(0L),
           (acc, t) => acc + length(t)).as("n_chars"),
@@ -1252,38 +1219,16 @@ object StreamingQueries {
   }
 
   /** Running tokenizer-fertility rollup — q135's report as an
-    * ingest-time stream: the stateless per-document application
-    * projection (the SAME shared `preTokenPattern` +
-    * `applyMergesExpr` definitions as [[tokenizeStream]] and the
-    * batch chain, so the three surfaces cannot drift), rolled into a
-    * complete-mode per-source aggregate whose state is bounded by the
-    * source domain. The corpus card updates live as the crawl lands;
-    * the integer ratio columns are the q135 contract verbatim. */
+    * ingest-time stream: [[tokenizeStream]]'s stateless per-document
+    * counts, keyed by source, rolled by q135's own
+    * [[graft.queries.PipelineOps.fertilityOf]] into a complete-mode
+    * per-source aggregate whose state is bounded by the source domain.
+    * The corpus card updates live as the crawl lands. A NULL text is a
+    * zero-cost row counted in n_docs, matching batch q135's restore
+    * left-join semantics (ADVICE r10). */
   def fertilityStream(docs: DataFrame,
-      merges: Seq[graft.queries.PipelineOps.BpeMerge]): DataFrame = {
-    import graft.queries.PipelineOps
-    // NULL text ⇒ zero-cost row counted in n_docs, matching batch
-    // q135's restore left-join semantics (ADVICE r10)
-    docs.withColumn("pt", regexp_extract_all(
-        coalesce(col("text"), lit("")),
-        lit(PipelineOps.preTokenPattern), lit(0)))
-      .select(col("source"),
-        size(col("pt")).cast("long").as("np"),
-        aggregate(col("pt"), lit(0L),
-          (acc, t) => acc + length(t)).as("nc"),
-        aggregate(col("pt"), lit(0L),
-          (acc, t) => acc + length(PipelineOps.applyMergesExpr(t, merges)))
-          .as("ns"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum("np").as("n_pretokens"),
-        sum("nc").as("n_chars"), sum("ns").as("n_symbols"))
-      .withColumn("symbols_per_kchar",
-        expr("CAST(IF(n_chars = 0, 0, (1000 * n_symbols) div n_chars) " +
-          "AS BIGINT)"))
-      .withColumn("saved_pct",
-        expr("CAST(IF(n_chars = 0, 0, (100 * (n_chars - n_symbols)) " +
-          "div n_chars) AS BIGINT)"))
-  }
+      merges: Seq[graft.queries.PipelineOps.BpeMerge]): DataFrame =
+    graft.queries.PipelineOps.fertilityOf(tokenCounts(docs, merges, "source"))
 
   // ------------------------------------------- funnel / retention twins
   final case class FEvent(user_id: Long, event_type: String, t: Long)

@@ -14,8 +14,12 @@ class IngestMainSpec extends SparkSuite {
   test("IngestMain runs end-to-end, reconciles, and a replay is a " +
       "no-op on the indexes") {
     import spark.implicits._
+    // a `file:` URI, not a bare path: the rebuild probes must go
+    // through the Hadoop FileSystem, or a replay would miss the
+    // committed indexes, rebuild them and append its survivors again
     val out = java.nio.file.Files
-      .createTempDirectory("graft_ingest_spec").toString
+      .createTempDirectory("graft_ingest_spec").toUri.toString
+      .stripSuffix("/")
     val counters = IngestMain.runIngest(spark, sf0001, out).toMap
 
     // independent recomputation of the delta split and the policy

@@ -49,4 +49,10 @@ class TablesEncodingSpec extends SparkSuite {
     assert(a.select(col("event_id"), unix_micros(col("ts")).as("ua"))
       .join(want, key).filter(col("ua") =!= col("uw")).count() == 0)
   }
+
+  test("fan width caps at DefaultFanMax on a local session only") {
+    assert(Tables.fanWidthOf(32, isLocal = true) == 16)
+    assert(Tables.fanWidthOf(32, isLocal = false) == 32)
+    assert(Tables.fanWidthOf(4, isLocal = true) == 4)
+  }
 }
